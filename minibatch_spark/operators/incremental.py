@@ -57,12 +57,13 @@ the FULL standing band/sig/hash tables). Two read paths:
   file-set, a 100 TB store approaches the full 256-way split with
   GB-sized dirs — never thousands of tiny files.
 
-Deltas are deliberately UNPARTITIONED (one small file per batch per
-root), and compaction is RATIO-GATED (``maybe_compact``: compact only
-once deltas exceed a fraction of the base — geometric amortization, so
-total compaction work is O(|store| log |store|), not the
-O(n_batches x |store|) a fixed every-N cadence pays). The standard LSM
-contract, with the merge policy made explicit.
+Deltas are deliberately UNPARTITIONED (a few small files per batch per
+root, one per task of the append), and compaction is RATIO-GATED
+(``maybe_compact``: compact only once deltas exceed a fraction of the
+base — geometric amortization, so total compaction work is
+O(|store| log |store|), not the O(n_batches x |store|) a fixed every-N
+cadence pays). The standard LSM contract, with the merge policy made
+explicit.
 
 Scale stance (100 TB corpus, GB-scale shards): the new shard's band table
 is broadcast against the store's — the store is never shuffled and never
@@ -83,8 +84,10 @@ import hashlib
 import json
 import os
 import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import InheritableThread
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from minibatch_spark.catalog import (
@@ -161,6 +164,29 @@ def _prune_files(files: "list[str]", pcol: str, allowed) -> "list[str]":
     return out
 
 
+def _beside(fn):
+    """Run ``fn`` on a thread beside the caller; returns a ``join()`` that
+    waits for it and returns its exception (None on success). The thread
+    is an InheritableThread, so its Spark jobs carry the caller's local
+    properties (a streaming micro-batch's batch and query ids)."""
+    err: list = []
+
+    def run():
+        try:
+            fn()
+        except BaseException as e:  # handed to the joiner
+            err.append(e)
+
+    t = InheritableThread(target=run)
+    t.start()
+
+    def join():
+        t.join()
+        return err[0] if err else None
+
+    return join
+
+
 def band_keys(sig_df: DataFrame) -> DataFrame:
     """(doc_id, sig) -> one row per LSH band: (doc_id, band_key) with
     band_key = md5('<band_id>:' || the band's 4 signature components) —
@@ -171,22 +197,22 @@ def band_keys(sig_df: DataFrame) -> DataFrame:
     bucketing by band_key alone satisfies the join's full clustering
     (spark.sql.requireAllClusterKeysForCoPartition), so the compacted
     store side needs no Exchange."""
-    return sig_df.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            F.lit(f"{b}:"),
-                            *[F.element_at("sig", b * 4 + j + 1) for j in range(4)],
-                        )
-                    )
-                    for b in range(N_BANDS)
-                ]
+    return sig_df.select("doc_id", F.explode(_band_key_array()).alias("band_key"))
+
+
+def _band_key_array() -> Column:
+    """The array of a ``sig`` column's N_BANDS band keys (see band_keys)."""
+    return F.array(
+        *[
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    F.lit(f"{b}:"),
+                    *[F.element_at("sig", b * 4 + j + 1) for j in range(4)],
+                )
             )
-        ).alias("band_key"),
+            for b in range(N_BANDS)
+        ]
     )
 
 
@@ -223,12 +249,13 @@ class MinhashDedupStore:
         self._epoch_cache: dict = {}
         # opt-in observability (the slope audit sets it): when True,
         # process_batch records the batch's LSH candidate-pair count in
-        # ``last_cand_count`` — one extra count() over the staged frame
-        # per batch, skipped by default (round-9 ADVICE on the curate
-        # store's unconditional counter; symmetric here so both stores'
-        # slope rows carry the same candidate attribution)
+        # ``last_cand_count`` through an Observation on the result action
+        # it already runs — no extra job (symmetric with the curate
+        # store, so both stores' slope rows carry the same candidate
+        # attribution)
         self.count_candidates = False
         self.last_cand_count: "int | None" = None
+        self._exprs: "dict | None" = None  # see _batch_exprs
         os.makedirs(store_dir, exist_ok=True)
 
     def rollback(self, batch_tag: str) -> None:
@@ -704,7 +731,7 @@ class MinhashDedupStore:
                 .partitionBy(_BAND_PCOL)
             )
         else:
-            w = df.repartition(1).write.mode("overwrite")
+            w = df.coalesce(1).write.mode("overwrite")
         (
             w.bucketBy(n_buckets, "band_key")
             .sortBy("band_key")
@@ -757,73 +784,86 @@ class MinhashDedupStore:
         exact-hash and signature roots, each consolidated into a fresh
         base PARTITIONED by its prune key (md5 prefix / doc_id residue) so
         subsequent batches' standing-side reads touch only matching
-        directories. Crash-safe by the same ordering as compact_bands:
-        new base -> atomic manifest flip -> gc. Run BETWEEN batches only;
+        directories. The three rewrites run side by side, each keeping the
+        crash-safe order of compact_bands: new base -> atomic manifest
+        flip -> gc (exact and sigs share the roots manifest, flipped once
+        after both their bases are written). Run BETWEEN batches only;
         ``exclude_tags`` protects an in-flight streaming batch."""
         import shutil
 
-        self.compact_bands(
-            n_buckets=n_buckets,
-            exclude_tags=exclude_tags,
-            target_partition_bytes=target_partition_bytes,
+        join_bands = _beside(
+            lambda: self.compact_bands(
+                n_buckets=n_buckets,
+                exclude_tags=exclude_tags,
+                target_partition_bytes=target_partition_bytes,
+            )
         )
-        specs = {
-            "exact": (
-                self.exact_dir,
-                _EXACT_SCHEMA,
-                _EXACT_PCOL,
-                F.conv(F.substring("text_hash", 1, 2), 16, 10).cast("long"),
-            ),
-            "sigs": (
-                self.sigs_dir,
-                _SIG_SCHEMA,
-                _SIG_PCOL,
-                F.pmod("doc_id", F.lit(256)),
-            ),
-        }
-        man = self._roots_manifest() or {}
-        new_man = dict(man)
-        gc_later = []
-        for root_name, (root, schema, pcol, pexpr) in specs.items():
-            raw = self._raw_snapshot(root, exclude_tags)
-            ent = man.get(root_name)
-            covered = (
-                {os.path.realpath(f) for f in ent["covered_files"]}
-                if ent
-                else set()
-            )
-            delta = [f for f in raw if os.path.realpath(f) not in covered]
-            parts = (self._files(ent["location"]) if ent else []) + delta
-            if not parts:
-                continue
-            new_loc = os.path.join(
-                self.store_dir, f"{root_name}_base-{uuid.uuid4().hex[:8]}"
-            )
-            total_bytes = sum(
-                os.path.getsize(f) for f in parts if os.path.exists(f)
-            )
-            gsz = _group_size(total_bytes, target_partition_bytes)
-            n_dirs = -(-256 // gsz)
-            df = self._read_files(parts, schema)
-            if n_dirs > 1:
-                group = (
-                    F.floor(pexpr / F.lit(gsz)).cast("long").cast("string")
-                )
-                (
-                    df.withColumn(pcol, group)
-                    .repartition(n_dirs, F.col(pcol))
-                    .write.mode("overwrite")
-                    .partitionBy(pcol)
-                    .parquet(new_loc)
-                )
-            else:
-                df.repartition(1).write.mode("overwrite").parquet(new_loc)
-            new_man[root_name] = {
-                "location": new_loc,
-                "covered_files": [os.path.realpath(f) for f in raw],
-                "gsz": int(gsz),
+        try:
+            specs = {
+                "exact": (
+                    self.exact_dir,
+                    _EXACT_SCHEMA,
+                    _EXACT_PCOL,
+                    F.conv(F.substring("text_hash", 1, 2), 16, 10).cast("long"),
+                ),
+                "sigs": (
+                    self.sigs_dir,
+                    _SIG_SCHEMA,
+                    _SIG_PCOL,
+                    F.pmod("doc_id", F.lit(256)),
+                ),
             }
-            gc_later.append((root, delta, ent["location"] if ent else None))
+            man = self._roots_manifest() or {}
+            new_man = dict(man)
+            gc_later = []
+            joins = []
+            for root_name, (root, schema, pcol, pexpr) in specs.items():
+                raw = self._raw_snapshot(root, exclude_tags)
+                ent = man.get(root_name)
+                covered = (
+                    {os.path.realpath(f) for f in ent["covered_files"]}
+                    if ent
+                    else set()
+                )
+                delta = [f for f in raw if os.path.realpath(f) not in covered]
+                parts = (self._files(ent["location"]) if ent else []) + delta
+                if not parts:
+                    continue
+                new_loc = os.path.join(
+                    self.store_dir, f"{root_name}_base-{uuid.uuid4().hex[:8]}"
+                )
+                total_bytes = sum(
+                    os.path.getsize(f) for f in parts if os.path.exists(f)
+                )
+                gsz = _group_size(total_bytes, target_partition_bytes)
+                n_dirs = -(-256 // gsz)
+                df = self._read_files(parts, schema)
+                if n_dirs > 1:
+                    group = (
+                        F.floor(pexpr / F.lit(gsz)).cast("long").cast("string")
+                    )
+                    w = (
+                        df.withColumn(pcol, group)
+                        .repartition(n_dirs, F.col(pcol))
+                        .write.mode("overwrite")
+                        .partitionBy(pcol)
+                    )
+                else:
+                    w = df.coalesce(1).write.mode("overwrite")
+                joins.append(_beside(lambda w=w, loc=new_loc: w.parquet(loc)))
+                new_man[root_name] = {
+                    "location": new_loc,
+                    "covered_files": [os.path.realpath(f) for f in raw],
+                    "gsz": int(gsz),
+                }
+                gc_later.append((root, delta, ent["location"] if ent else None))
+            for err in [j() for j in joins]:
+                if err is not None:
+                    raise err
+        finally:
+            err = join_bands()
+        if err is not None:
+            raise err
         if not gc_later:
             return
         tmp = self._roots_manifest_path + ".tmp"
@@ -860,11 +900,21 @@ class MinhashDedupStore:
         (streaming/dedup_stream.py).
 
         keep = 0 iff the doc is (a) an exact duplicate of a lower-id doc
-        (in store or shard), or (b) a shard representative whose signature
-        pairs (banded LSH candidate + est_jaccard >= 0.5) with any lower-id
-        representative in store ∪ shard. Docs with < 3 tokens have no
-        signature and can only be exact duplicates — same contract as
-        dedup_minhash_pairs.
+        (in store or shard; all NULL texts count as one text), or (b) a
+        shard representative whose signature pairs (banded LSH candidate +
+        est_jaccard >= 0.5) with any lower-id representative in store ∪
+        shard. Docs with < 3 tokens have no signature and can only be
+        exact duplicates — same contract as dedup_minhash_pairs.
+
+        Spark actions per call: one materialization of the shard's new
+        representatives, the three store appends and the materialization
+        of the returned result. The sigs append is the chain's stage
+        boundary (read back for the candidate and verify joins); the
+        exact and bands appends run beside the chain. Every append has
+        landed before this call returns or raises, so if the result
+        action fails, a tagged batch is undone by ``rollback(batch_tag)``,
+        but an untagged (batch-API) call has no rollback and leaves its
+        appends in the store.
 
         Standing-side reads go through the EPOCH CACHE (_probe_view): the
         compacted base of each root is a MEMORY_AND_DISK-persisted frame
@@ -888,109 +938,184 @@ class MinhashDedupStore:
             )
         self._batch += 1
         tag = f"b{self._batch}"
-        th = docs.select("doc_id", "text", F.md5("text").alias("text_hash"))
-        rep_id = th.groupBy("text_hash").agg(F.min("doc_id").alias("rep_id"))
-        th = th.join(rep_id, "text_hash")
+        # each text's rep is its lowest doc_id, by one window (no
+        # self-join); NULL texts hash to NULL and form one partition, so
+        # they dedup as one text — the oracle's rule
+        th = docs.select(
+            "doc_id", "text", F.md5("text").alias("text_hash")
+        ).withColumn(
+            "rep_id", F.min("doc_id").over(Window.partitionBy("text_hash"))
+        )
 
-        # shard representatives not already known to the store; the store's
-        # exact table through the epoch cache (base blocks + bounded deltas)
+        # every standing-side view is pinned HERE, before the first append
+        # below, so no lineage in this batch can observe its own files
         store_exact = self._probe_view("exact")
+        store_bands = self._probe_view("bands")
+        store_sigs = self._probe_view("sigs")
+
+        # shard representatives not already known to the store (null-safe:
+        # a NULL-text rep matches a stored NULL hash)
+        known = store_exact.select(F.col("text_hash").alias("known_hash"))
         new_reps = stage(
             th.filter(F.col("doc_id") == F.col("rep_id"))
-            .join(store_exact.select("text_hash"), "text_hash", "left_anti")
+            .join(
+                known,
+                F.col("text_hash").eqNullSafe(F.col("known_hash")),
+                "left_anti",
+            )
             .select("doc_id", "text", "text_hash"),
             f"incdedup-newreps-{tag}",
         )
-
-        # signatures for new reps with at least one shingle; tokens staged
-        # through a projection first — inline HOF args re-evaluate per
-        # array element (the O(n^2)-per-row trap)
-        sh = (
-            new_reps.select("doc_id", tokens("text").alias("tk"))
-            .select("doc_id", shingles_of(F.col("tk")).alias("sh"))
-            .filter(F.size("sh") > 0)
-        )
-        h_df = sh.select("doc_id", shingle_hashes(F.col("sh")).alias("hs"))
-        sigs_new = stage(
-            h_df.select("doc_id", fast_minhash_sig(F.col("hs")).alias("sig")),
-            f"incdedup-sigs-{tag}",
-        )
-
-        # candidates: shard bands (small, BROADCAST) vs store ∪ shard bands.
-        # The store side is the PERSISTED band table (epoch-cached base +
-        # deltas — never re-derived, never shuffled, the shard side
-        # broadcasts); a non-broadcastable shard would instead shuffle
-        # only ITSELF to the store's bucket layout (see compact_bands /
-        # the no-store-exchange plan guard).
-        bands_new = stage(band_keys(sigs_new), f"incdedup-bands-{tag}")
-        all_bands = self._probe_view("bands").unionByName(bands_new)
-        cand = stage(
-            all_bands.alias("a")
-            .join(
-                F.broadcast(bands_new.alias("b")),
-                (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
+        # the exact append reads only new_reps: it runs beside the
+        # sigs -> result chain, and so does the bands append below. Deltas
+        # stay UNPARTITIONED — a few small files per root per batch (module
+        # docstring), absorbed into the partitioned bases at the next
+        # compaction.
+        joins = [
+            _beside(
+                lambda: new_reps.select("text_hash", "doc_id")
+                .write.mode("append")
+                .parquet(self._append_dir(self.exact_dir, batch_tag))
             )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"]),
-            f"incdedup-cand-{tag}",
-        )
-        # opt-in candidate accounting (see __init__) — reads the staged
-        # frame, so the enabled cost is one cheap job per batch
-        self.last_cand_count = (
-            cand.count() if self.count_candidates else None
-        )
-        all_sigs = self._probe_view("sigs").unionByName(sigs_new)
-        sa = all_sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-        sb = sigs_new.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-        est = (
-            F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m))
-            / F.lit(N_MINHASH)
-        )
-        drops = (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .filter(est >= F.lit(MINHASH_EST_THRESHOLD))
-            .select(F.col("doc_b").alias("doc_id"))
-            .distinct()
-            .withColumn("mdropped", F.lit(1))
-        )
+        ]
+        try:
+            # signatures for new reps with at least one shingle
+            x = self._batch_exprs()
+            h_df = (
+                new_reps.select("doc_id", x["tk"].alias("tk"))
+                .select("doc_id", x["sh"].alias("sh"))
+                .filter(F.size("sh") > 0)
+                .select("doc_id", x["hs"].alias("hs"))
+            )
+            # the sigs append IS the chain's stage boundary: sigs_new reads
+            # back exactly the part files it wrote, so the MinHash runs
+            # once and later appends stay out of the lineage
+            sigs_dir = self._append_dir(self.sigs_dir, batch_tag)
+            before = set(self._files(sigs_dir))
+            h_df.select("doc_id", x["sig"].alias("sig")).write.mode(
+                "append"
+            ).parquet(sigs_dir)
+            sigs_new = self._read_files(
+                [f for f in self._files(sigs_dir) if f not in before],
+                _SIG_SCHEMA,
+            )
+            # band keys are a cheap md5 over those few files: derived in
+            # place for the candidate join while their append runs beside
+            bands_new = sigs_new.select(
+                "doc_id", F.explode(x["bands"]).alias("band_key")
+            )
+            joins.append(
+                _beside(
+                    lambda: bands_new.write.mode("append").parquet(
+                        self._append_dir(self.bands_dir, batch_tag)
+                    )
+                )
+            )
 
-        new_rep_ids = new_reps.select("doc_id").withColumn("is_new_rep", F.lit(1))
-        result = stage(
-            th.join(new_rep_ids, "doc_id", "left")
-            .join(drops, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.when(F.col("is_new_rep").isNull(), F.lit(0))  # exact dup
-                .when(F.col("mdropped").isNotNull(), F.lit(0))  # near dup
-                .otherwise(F.lit(1))
-                .alias("keep"),
-            ),
-            f"incdedup-result-{tag}",
+            # candidates: shard bands (small, BROADCAST) vs store ∪ shard
+            # bands. The store side is the PERSISTED band table
+            # (epoch-cached base + deltas — never re-derived, never
+            # shuffled, the shard side broadcasts); a non-broadcastable
+            # shard would instead shuffle only ITSELF to the store's bucket
+            # layout (see compact_bands / the no-store-exchange plan guard).
+            cand = (
+                store_bands.unionByName(bands_new)
+                .alias("a")
+                .join(
+                    F.broadcast(bands_new.alias("b")),
+                    (F.col("a.band_key") == F.col("b.band_key"))
+                    & (F.col("a.doc_id") < F.col("b.doc_id")),
+                )
+                .select(
+                    F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"),
+                )
+                .dropDuplicates(["doc_a", "doc_b"])
+            )
+            # opt-in candidate accounting (see __init__): observed on the
+            # result action below, which already reads cand once
+            seen = None
+            if self.count_candidates:
+                seen = Observation()
+                cand = cand.observe(seen, F.count(F.lit(1)).alias("n"))
+            sa = store_sigs.unionByName(sigs_new).select(
+                F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")
+            )
+            sb = sigs_new.select(
+                F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")
+            )
+            near_dups = (
+                cand.join(sa, "doc_a")
+                .join(sb, "doc_b")
+                .filter(x["similar"])
+                .select(F.col("doc_b").alias("doc_id"))
+            )
+            # keep = 1 exactly for the new reps that are not near dups:
+            # every other doc is an exact dup (of the shard or the store).
+            # One union + groupBy (a single shuffle) instead of joins: it
+            # keeps the cand lineage on the action's main path, where AQE
+            # cannot prune it (and an Observation on it) as the build side
+            # of a join whose other side turned out empty
+            flags = [
+                (docs, 0, 0),
+                (new_reps, 1, 0),
+                (near_dups, 0, 1),  # near_dups ⊆ new_reps
+            ]
+            result = stage(
+                reduce(
+                    DataFrame.unionByName,
+                    (
+                        f.select(
+                            "doc_id",
+                            F.lit(rep).alias("rep"),
+                            F.lit(near).alias("near"),
+                        )
+                        for f, rep, near in flags
+                    ),
+                )
+                .groupBy("doc_id")
+                .agg((F.max("rep") - F.max("near")).alias("keep")),
+                f"incdedup-result-{tag}",
+            )
+        finally:
+            # never return or raise with an append still writing: a
+            # replay's rollback must not race a live write into its tag
+            errs = [j() for j in joins]
+        for err in errs:
+            if err is not None:
+                raise err
+        # AQE prunes an empty cand's subtree, metric and all: no row = 0
+        self.last_cand_count = (
+            seen.get.get("n", 0) if seen is not None else None
         )
-        # result/sigs_new/new_reps are MATERIALIZED above (stage = persist +
-        # eager count) before the store grows, so their lineage can never
-        # observe this batch's own appends. Deltas stay UNPARTITIONED —
-        # one small file per root per batch (module docstring), absorbed
-        # into the partitioned bases at the next compaction.
-        new_reps.select("text_hash", "doc_id").write.mode("append").parquet(
-            self._append_dir(self.exact_dir, batch_tag)
-        )
-        sigs_new.write.mode("append").parquet(
-            self._append_dir(self.sigs_dir, batch_tag)
-        )
-        bands_new.write.mode("append").parquet(
-            self._append_dir(self.bands_dir, batch_tag)
-        )
-        # release intra-batch stage blocks: a thousand-batch ingest must not
-        # accrete cached frames (their data is on disk in the store now).
+        # release the intra-batch stage: a thousand-batch ingest must not
+        # accrete cached frames (its rows are on disk in the store now).
         # `result` stays persisted — it is the returned value; an evicted
         # recompute stays correct because every store read above pinned a
-        # pre-append file-list snapshot.
-        for f in (new_reps, sigs_new, bands_new, cand):
-            f.unpersist(blocking=False)
+        # file list (the pre-append snapshots plus this batch's own files).
+        new_reps.unpersist(blocking=False)
         return result
+
+    def _batch_exprs(self) -> dict:
+        """process_batch's column expressions, built ONCE per store: they
+        depend only on column names, and building the 16-way MinHash and
+        the band keys over py4j cost ~0.4 s of driver time per batch."""
+        if self._exprs is None:
+            est = F.size(
+                F.filter(F.zip_with("sig_a", "sig_b", lambda a, b: a == b), lambda m: m)
+            ) / F.lit(N_MINHASH)
+            # tokens are staged through a projection before shingling —
+            # inline HOF args re-evaluate per array element (the
+            # O(n^2)-per-row trap)
+            self._exprs = {
+                "tk": tokens("text"),
+                "sh": shingles_of(F.col("tk")),
+                "hs": shingle_hashes(F.col("sh")),
+                "sig": fast_minhash_sig(F.col("hs")),
+                "bands": _band_key_array(),
+                "similar": est >= F.lit(MINHASH_EST_THRESHOLD),
+            }
+        return self._exprs
 
 
 def _incremental_oracle() -> str:

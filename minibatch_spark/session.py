@@ -56,6 +56,19 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's RAM (MemTotal), capped at 16g: a fixed 16g heap
+    on a 15 GB host let the JVM grow until the kernel OOM-killed it."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return f"{max(1024, min(16 * 1024, kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "minibatch-spark",
     master: str | None = None,
@@ -78,7 +91,7 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or _cpus())
-    conf.setdefault("spark.driver.memory", "16g")
+    conf.setdefault("spark.driver.memory", _default_driver_memory())
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

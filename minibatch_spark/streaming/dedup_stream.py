@@ -27,6 +27,7 @@ from __future__ import annotations
 import os
 from typing import TYPE_CHECKING, Callable, Optional
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from minibatch_spark.operators.incremental import MinhashDedupStore
@@ -54,7 +55,9 @@ def dedup_doc_stream(
     tag for idempotent replay.
 
     ``on_batch(batch_id, n_docs, n_kept)`` is an optional observer hook
-    (metrics/backpressure), called after each batch commits.
+    (metrics/backpressure), called after each batch's sink write. Its
+    counts come from an ``Observation`` on that write, not from extra
+    Spark jobs.
 
     ``compact_every=N`` (0 disables): every N batches the handler calls
     ``store.maybe_compact()`` at the ONE safe point the rollback
@@ -73,7 +76,14 @@ def dedup_doc_stream(
     rescanned — signature-width reads only); the store's compacted bases
     are EPOCH-CACHED executor-resident frames, so the per-batch standing
     read costs cached-block scans plus the bounded delta files; appends
-    are parquet file adds. A thousand-shard ingest costs the same total
+    are parquet file adds. A micro-batch runs only the actions its output
+    needs: the three tagged store appends (the sigs append doubles as a
+    stage boundary, the exact and bands appends run beside the chain),
+    two materializations in ``process_batch`` and the sink write; a
+    compaction adds one rewrite per root, the three side by side. The
+    store appends land before ``process_batch``'s result materializes, so
+    a failure there leaves a tagged partial batch that the replay rolls
+    back. A thousand-shard ingest costs the same total
     work as the one-shot batch dedup, which is the batch-invariance the
     `dedup_incremental_minhash` oracle pins."""
     store = MinhashDedupStore(spark, store_dir)
@@ -94,13 +104,26 @@ def dedup_doc_stream(
         store.rollback(tag)
         docs_b = batch_df.select("doc_id", "text")
         result = store.process_batch(docs_b, batch_tag=tag)
-        kept = docs_b.join(
-            result.filter(F.col("keep") == 1).select("doc_id"), "doc_id"
+        # the batch's counts ride on the sink write, so on_batch costs no
+        # extra Spark job. Observed on the write's main path (every doc,
+        # before the keep filter): on a join's build side AQE could prune
+        # the node, metric and all, when the other side is empty
+        counts = Observation()
+        kept = (
+            docs_b.join(result, "doc_id")
+            .observe(
+                counts,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("keep").alias("n_kept"),
+            )
+            .filter(F.col("keep") == 1)
+            .drop("keep")
         )
         out = os.path.join(sink_dir, f"tag={tag}")
         kept.write.mode("overwrite").parquet(out)  # idempotent by tag
         if on_batch is not None:
-            on_batch(batch_id, docs_b.count(), kept.count())
+            m = counts.get
+            on_batch(batch_id, m.get("n_docs", 0), m.get("n_kept") or 0)
 
     writer = docs.writeStream.foreachBatch(_handle).option(
         "checkpointLocation", checkpoint_dir

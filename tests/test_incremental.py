@@ -480,3 +480,68 @@ def test_epoch_cache_survives_clear_cache_and_flips(spark, tmp_path):
     a = run(_store(spark, tmp_path, "cacheA"), clear_between=False)
     b = run(_store(spark, tmp_path, "cacheB"), clear_between=True)
     assert a == b and len(a) > 0
+
+
+# --- null texts and candidate accounting ---------------------------------
+
+
+def _oracle_keep(rows):
+    """The ``dedup_incremental_minhash`` DuckDB oracle over ``rows``."""
+    import duckdb
+
+    from minibatch_spark.operators.incremental import _incremental_oracle
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    try:
+        return sorted(tuple(r) for r in con.execute(_incremental_oracle()).fetchall())
+    finally:
+        con.close()
+
+
+def test_null_text_docs_match_oracle(spark, tmp_path):
+    """NULL texts hash to NULL: the oracle treats them as one text (the
+    lowest id keeps, the rest are exact dups), so no doc may vanish from
+    the result — in one batch, or split across two batches, where the
+    second batch's NULL must match the stored NULL hash."""
+    rows = [(1, "a b c d e"), (2, None), (3, None), (4, "a b c d e")]
+    want = _oracle_keep(rows)
+    assert want == [(1, 1), (2, 1), (3, 0), (4, 0)]
+
+    one = _store(spark, tmp_path, "one").process_batch(_docs(spark, rows))
+    assert sorted((r.doc_id, r.keep) for r in one.collect()) == want
+
+    store = _store(spark, tmp_path, "two")
+    got = []
+    for part in (rows[:2], rows[2:]):
+        got += [(r.doc_id, r.keep) for r in store.process_batch(_docs(spark, part)).collect()]
+    assert sorted(got) == want
+
+
+def test_candidate_count_observed_without_extra_count(spark, tmp_path, monkeypatch):
+    """count_candidates records the batch's distinct candidate pairs
+    through an Observation on the result action: the figure is exact and
+    the batch runs no more count() actions than with the flag off."""
+    import pyspark.sql.classic.dataframe as cdf
+
+    counts = []
+    real = cdf.DataFrame.count
+    monkeypatch.setattr(
+        cdf.DataFrame, "count", lambda self: counts.append(1) or real(self)
+    )
+
+    def run(flag):
+        store = _store(spark, tmp_path, f"cand-{flag}")
+        store.count_candidates = flag
+        store.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]))
+        del counts[:]
+        store.process_batch(_docs(spark, [(10, BASE), (11, NEAR), (12, NEAR)]))
+        return store.last_cand_count, len(counts)
+
+    off, n_off = run(False)
+    on, n_on = run(True)
+    assert off is None
+    assert n_on == n_off
+    # new reps 11 (12 is its exact dup): 11 pairs with stored doc 1
+    assert on == 1

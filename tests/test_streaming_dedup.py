@@ -319,3 +319,142 @@ def test_crash_at_cadence_callsite_recovers_exactly_once(spark, tmp_path):
     )
     q2.awaitTermination()
     _assert_recovered_exactly_once(spark, tmp_path, base, shard1, shard2)
+
+
+# --- the micro-batch's action budget ---------------------------------------
+
+
+def test_on_batch_counts_come_from_the_sink_write(spark, tmp_path):
+    """on_batch receives exact (batch_id, n_docs, n_kept) per batch, read
+    from an Observation on the sink write (that no count() job runs for
+    it is pinned by test_handler_runs_only_its_required_actions)."""
+    from minibatch_spark.streaming.dedup_stream import dedup_doc_stream
+
+    base = str(tmp_path)
+    src, _, _ = _shards_src(spark, base)
+    # a third batch that keeps nothing: its metrics must still arrive
+    _write_part(
+        spark, [(20, BASE), (21, NEAR)], os.path.join(src, "p3"), 1_000_000_200
+    )
+    seen = []
+    q = dedup_doc_stream(
+        spark, _stream(spark, src), os.path.join(base, "store"),
+        os.path.join(base, "sink"), os.path.join(base, "ckpt"),
+        on_batch=lambda bid, n, k: seen.append((bid, n, k)),
+    )
+    q.awaitTermination()
+    # shard1: 3 exact-dups 1; shard2: 10 exact and 11 near dup of 1;
+    # shard3: exact dups of 1 and 11
+    assert seen == [(0, 3, 2), (1, 3, 1), (2, 2, 0)]
+
+
+def test_handler_runs_only_its_required_actions(spark, tmp_path, monkeypatch):
+    """Each handler call runs at most 2 materializations (count), exactly
+    3 store appends and 1 sink write, plus one rewrite per root when the
+    cadence compacts. Counted as Python-level actions, so the budget
+    holds at any input size and core count."""
+    import threading
+
+    import pyspark.sql.classic.dataframe as cdf
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from minibatch_spark.streaming.dedup_stream import dedup_doc_stream
+
+    base = str(tmp_path)
+    src, _, _ = _shards_src(spark, base)
+    sink = os.path.join(base, "sink")
+    events = []
+    lock = threading.Lock()
+
+    def spy(cls, name, kind):
+        real = getattr(cls, name)
+
+        def wrapped(self, *a, **k):
+            path = a[0] if a else k.get("path", "")
+            with lock:
+                events.append((kind, str(path)))
+            return real(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, wrapped)
+
+    spy(cdf.DataFrame, "count", "count")
+    spy(DataFrameWriter, "parquet", "write")
+    spy(DataFrameWriter, "saveAsTable", "table")
+    q = dedup_doc_stream(
+        spark, _stream(spark, src), os.path.join(base, "store"), sink,
+        os.path.join(base, "ckpt"), compact_every=1,
+        compact_min_delta_bytes=0, compact_ratio=0.0,
+    )
+    q.awaitTermination()
+
+    # every handler ends with its sink write: split the log there
+    calls, cur = [], []
+    for kind, path in events:
+        cur.append((kind, path))
+        if kind == "write" and path.startswith(sink):
+            calls.append(cur)
+            cur = []
+    assert cur == [] and len(calls) == 2
+    for i, call in enumerate(calls):
+        appends = sorted(
+            os.path.basename(os.path.dirname(p))
+            for k, p in call
+            if k == "write" and f"tag=batch-{i}" in p and not p.startswith(sink)
+        )
+        rewrites = [
+            p for k, p in call if k == "table" or (k == "write" and "_base-" in p)
+        ]
+        assert sum(k == "count" for k, _ in call) <= 2, call
+        assert appends == ["bands", "exact", "sigs"], call
+        assert sum(p.startswith(sink) for _, p in call) == 1, call
+        # batch 0 has nothing to compact; batch 1 rewrites each root once
+        assert len(rewrites) == (0 if i == 0 else 3), call
+        assert len(call) == sum(k == "count" for k, _ in call) + 4 + len(rewrites)
+
+
+def test_crash_after_store_appends_before_result(spark, tmp_path, monkeypatch):
+    """The failure window the append-as-stage-boundary design opens: the
+    sigs append (and the exact and bands appends beside the chain) have
+    landed, then the batch dies BEFORE process_batch's result
+    materializes. The replay must roll the partial tag back and
+    reprocess — corpus and store bit-identical to a crash-free run."""
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    import minibatch_spark.operators.incremental as inc
+    from minibatch_spark.streaming.dedup_stream import dedup_doc_stream
+
+    base = str(tmp_path)
+    src, shard1, shard2 = _shards_src(spark, base)
+    store_dir = os.path.join(base, "store")
+    real = inc.stage
+    crashed = []
+
+    def crash_before_result(df, name, *a, **k):
+        if name.startswith("incdedup-result") and not crashed:
+            crashed.append(name)
+            raise RuntimeError("injected crash: store appended, result unmaterialized")
+        return real(df, name, *a, **k)
+
+    monkeypatch.setattr(inc, "stage", crash_before_result)
+    q = dedup_doc_stream(
+        spark, _stream(spark, src), store_dir,
+        os.path.join(base, "sink"), os.path.join(base, "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+    assert crashed
+    # all three appends of the crashed attempt are on disk (the appends
+    # beside the chain were joined before the error left process_batch)
+    store = inc.MinhashDedupStore(spark, store_dir)
+    for root in (store.exact_dir, store.sigs_dir, store.bands_dir):
+        assert store._files(os.path.join(root, "tag=batch-0")), root
+    assert not os.path.exists(os.path.join(base, "sink", "tag=batch-0"))
+
+    monkeypatch.setattr(inc, "stage", real)
+    q2 = dedup_doc_stream(
+        spark, _stream(spark, src), store_dir,
+        os.path.join(base, "sink"), os.path.join(base, "ckpt"),
+    )
+    q2.awaitTermination()
+    _assert_recovered_exactly_once(spark, tmp_path, base, shard1, shard2)
