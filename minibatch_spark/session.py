@@ -26,7 +26,9 @@ from pyspark.sql import SparkSession
 
 
 def _cpus() -> str:
-    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Cores for local[] and the default shuffle partitions: the
+    SPARK_GRAFT_CPUS override, else the CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 DEFAULT_CONF: dict[str, str] = {

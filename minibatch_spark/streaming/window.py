@@ -42,6 +42,24 @@ dicts — reference parity (models.py:116-133). That materialization is the
 reference's 16 MB-capped design; for scale work pass ``as_dataframe=True``
 and the fn gets the micro-batch DataFrame instead (the idiomatic
 foreachBatch path with no driver materialization).
+
+Buffer listing (reference parity: one poll of the buffer is one loop step
+with no cluster round-trip, minibatch/window.py:175-226): the file source
+re-lists each micro-batch's files in ``getBatch``, and above
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32 paths) that
+listing is a Spark job with one task per file (~2 s before a 160-file
+catch-up batch on a 4-core host). The source reads the threshold from the
+session the reader was built on, at every ``getBatch``, not from the
+query's session clone. So ``run()`` builds the reader on an isolated
+session that lists on the driver (``_driver_listing_session``). A
+``Stream`` buffer is always a local directory, so the remote-listing cost
+the listing job exists for never occurs here; the caller's session and
+every other read keep Spark's default. The plan is then handed back to
+the caller's session (``_on_session``) and the query starts there: its
+``StreamingQueryListener``s and ``spark.streams`` see it, and an
+``as_dataframe`` emit fn's ``batch_df.sparkSession`` is the query's clone
+of the caller's session (temp views registered before ``run()`` are
+visible, later ones are not).
 """
 
 from __future__ import annotations
@@ -60,6 +78,33 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from minibatch_spark.streaming.models import SPARK_DDL, Stream, utcnow
+
+
+def _driver_listing_session(spark):
+    """An isolated session carrying the caller's modifiable runtime confs
+    (session time zone, Arrow, file-source settings) whose file listing
+    never becomes a Spark job. The caller's session is not modified."""
+    session = spark.newSession()
+    conf = spark.conf
+    for key, value in conf.getAll.items():
+        if conf.isModifiable(key):
+            session.conf.set(key, value)
+    session.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+    )
+    return session
+
+
+def _on_session(spark, df):
+    """``df``'s plan as a DataFrame of ``spark``: through a global temp
+    view (the one catalog sessions share), dropped as soon as the plan is
+    resolved. Sources in the plan keep the session they were built on."""
+    name = f"window_reader_{uuid.uuid4().hex}"
+    df.createGlobalTempView(name)
+    try:
+        return spark.table(f"{spark.conf.get('spark.sql.globalTempDatabase')}.{name}")
+    finally:
+        spark.catalog.dropGlobalTempView(name)
 
 
 @dataclass
@@ -466,12 +511,16 @@ class WindowEmitter:
         then flushes remaining carry as final windows.
         """
         self.stream.flush()
-        reader = spark.readStream.schema(SPARK_DDL).option("maxFilesPerTrigger", 1000)
+        reader = (
+            _driver_listing_session(spark)
+            .readStream.schema(SPARK_DDL)
+            .option("maxFilesPerTrigger", 1000)
+        )
         if self.clean_source:
             reader = reader.option("cleanSource", "delete")
-        reader = reader.parquet(self.stream.buffer_dir)
+        source = _on_session(spark, reader.parquet(self.stream.buffer_dir))
         writer = (
-            reader.writeStream.foreachBatch(self._on_batch)
+            source.writeStream.foreachBatch(self._on_batch)
             .option("checkpointLocation", os.path.join(self.checkpoint_dir, "spark"))
             .queryName(self.name)
         )

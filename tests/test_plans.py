@@ -613,11 +613,26 @@ def test_winnow_chunked_exchanges_codegen_md5(spark):
     min via a zip_with least-chain over W shifted slices of that
     ATTRIBUTE, and aggregates fps arrays per doc. Exactly TWO hash
     exchanges remain — the (doc_id, chunk) fanout and the final agg of
-    small array rows — and no Sort or Window anywhere."""
+    small array rows — and no Sort or Window anywhere.
+
+    The plan is built in the at-scale regime (adaptive repartition counts
+    at their cap): at smoke scale the size-derived counts drop to 1 and
+    the exchanges vanish, so the count would move with fixture bytes."""
+    import minibatch_spark.catalog as cat
+    from minibatch_spark import registry
     from minibatch_spark.plans import explain_str
 
-    df = _q("text_winnow_fingerprint")(spark, SF_SMOKE)
-    plan = explain_str(df, mode="simple")
+    old = cat.TASK_TARGET_BYTES
+    cat.TASK_TARGET_BYTES = 1  # every input counts as large: counts at the cap
+    try:
+        cat._SPREAD_MEMO.clear()
+        registry._PLAN_MEMO.clear()
+        df = _q("text_winnow_fingerprint")(spark, SF_SMOKE)
+        plan = explain_str(df, mode="simple")
+    finally:
+        cat.TASK_TARGET_BYTES = old
+        cat._SPREAD_MEMO.clear()
+        registry._PLAN_MEMO.clear()
     assert plan.count("Exchange hashpartitioning") == 2
     assert "Sort [" not in plan and " Window [" not in plan
     # the hash transform must be evaluated once per row as a GENERATOR

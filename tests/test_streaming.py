@@ -928,3 +928,86 @@ def test_session_window_keyless_single_stream(spark, tmp_path):
     )
     em.run(spark, available_now=True)
     assert seen == [[0, 1, 2], [3, 4]]
+
+
+# -- buffer listing on the driver ------------------------------------------
+
+_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _jobs_per_batch(spark, tmp_path, name: str, n_files: int) -> float:
+    """Drain ``n_files`` one-row buffer files through a CountWindow and
+    return the Spark jobs its query ran per micro-batch, counted by the
+    query's job group."""
+    s = _mk(tmp_path, name=name)  # batchsize=1: one buffer file per append
+    for i in range(n_files):
+        s.append({"i": i})
+    seen = []
+    em = CountWindow(s, emitfn=lambda w: seen.extend(d["i"] for d in w.data), size=2)
+    em.run(spark, available_now=True)
+    assert sorted(seen) == list(range(n_files))
+    q = em._query
+    # job events reach the status store asynchronously
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert batches
+    return len(jobs) / len(batches)
+
+
+def test_buffer_listing_runs_no_spark_job(spark, tmp_path):
+    """A micro-batch over more buffer files than the caller's parallel
+    discovery threshold runs no extra listing job: it runs as many jobs
+    as one over fewer files. The caller's threshold is left as it was."""
+    before = spark.conf.get(_THRESHOLD)
+    spark.conf.set(_THRESHOLD, "4")
+    try:
+        many = _jobs_per_batch(spark, tmp_path, "many", 8)
+        few = _jobs_per_batch(spark, tmp_path, "few", 2)
+        assert spark.conf.get(_THRESHOLD) == "4"
+    finally:
+        spark.conf.set(_THRESHOLD, before)
+    assert many == few
+
+
+def test_window_rows_and_bounds_match_appended_created(spark, tmp_path):
+    """Window payloads and ``Window.query`` bounds equal the appended
+    ``created`` values exactly: the session time zone holds end to end."""
+    t0 = datetime(2024, 3, 10, 1, 59, 58, 123456)
+    created = [t0 + timedelta(seconds=i, microseconds=7 * i) for i in range(6)]
+    s = _mk(tmp_path, name="tz")
+    for i, c in enumerate(created):
+        s.append({"i": i}, created=c)
+    wins = []
+    CountWindow(s, emitfn=wins.append, size=2).run(spark, available_now=True)
+    assert [[d["i"] for d in w.data] for w in wins] == [[0, 1], [2, 3], [4, 5]]
+    assert [w.query for w in wins] == [
+        [created[k].isoformat(), created[k + 1].isoformat()] for k in (0, 2, 4)
+    ]
+
+
+def test_emitter_query_runs_on_the_caller_session(spark, tmp_path):
+    """The query stays on the caller's session: a listener attached there
+    receives its progress, and an ``as_dataframe`` batch sees the caller's
+    temp views registered before ``run()``."""
+    from minibatch_spark.streaming import metrics
+
+    spark.range(3).createOrReplaceTempView("caller_view")
+    listener = metrics.attach(spark)
+    got = []
+    try:
+        s = _mk(tmp_path)
+        for i in range(4):
+            s.append({"i": i})
+        em = CountWindow(
+            s,
+            emitfn=lambda df, _: got.append(df.sparkSession.table("caller_view").count()),
+            as_dataframe=True,
+        )
+        em.run(spark, available_now=True)
+        m = listener.wait_for_progress(str(em._query.runId))
+    finally:
+        metrics.detach(spark, listener)
+        spark.catalog.dropTempView("caller_view")
+    assert m["input_rows"] == 4
+    assert got == [3]
