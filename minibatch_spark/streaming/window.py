@@ -43,9 +43,20 @@ reference's 16 MB-capped design; for scale work pass ``as_dataframe=True``
 and the fn gets the micro-batch DataFrame instead (the idiomatic
 foreachBatch path with no driver materialization).
 
-Buffer listing (reference parity: one poll of the buffer is one loop step
-with no cluster round-trip, minibatch/window.py:175-226): the file source
-re-lists each micro-batch's files in ``getBatch``, and above
+Buffer reads (reference parity: the reference builds a window's data
+straight from its buffer documents in the consumer loop,
+minibatch/window.py:141,175-226): on the materializing path the query
+streams only the NAMES of each micro-batch's buffer files (a ``binaryFile``
+source with only ``path`` selected, so its scan only stats the files), and
+the driver reads those files itself with pyarrow. No message crosses the
+JVM; the Spark job per batch is a stat-only listing. Two consequences:
+progress ``numInputRows`` counts buffer FILES, not messages, and
+``created`` keeps the stored naive-UTC value whatever the session time
+zone. ``as_dataframe=True`` keeps the parquet reader, because its emit fn
+needs the rows as a DataFrame.
+
+Buffer listing: the file source re-lists each micro-batch's files in
+``getBatch``, and above
 ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32 paths) that
 listing is a Spark job with one task per file (~2 s before a 160-file
 catch-up batch on a 4-core host). The source reads the threshold from the
@@ -77,7 +88,10 @@ from typing import Callable, Optional
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from minibatch_spark.streaming.models import SPARK_DDL, Stream, utcnow
+from minibatch_spark.streaming.models import ARROW_SCHEMA, SPARK_DDL, Stream, utcnow
+
+# the binaryFile source's fixed schema; a streaming reader must be given it
+_BINARY_FILE_DDL = "path string, modificationTime timestamp, length long, content binary"
 
 
 def _driver_listing_session(spark):
@@ -121,6 +135,21 @@ class Window:
 
     def __len__(self):
         return len(self.data)
+
+
+def _decode_payloads(data: list[str]) -> list:
+    """``[json.loads(d) for d in data]`` in one decoder call. Exact for
+    every payload ``Stream.append`` writes, since each is one
+    ``json.dumps`` value; when the joined parse fails or yields a different
+    count, decode row by row so a malformed payload raises the same
+    ``JSONDecodeError``."""
+    try:
+        out = json.loads("[" + ",".join(data) + "]")
+    except ValueError:
+        out = None
+    if out is None or len(out) != len(data):
+        return [json.loads(d) for d in data]
+    return out
 
 
 def _run_pickled_emit(payload: bytes):
@@ -366,11 +395,10 @@ class WindowEmitter:
         self._pending = []
 
     def _build_window(self, rows: list[dict]) -> Window:
-        data = [json.loads(r["data"]) for r in rows]
         return Window(
             stream=self.stream.name,
             created=utcnow(),
-            data=data,
+            data=_decode_payloads([r["data"] for r in rows]),
             query=self.window_query(rows),
         )
 
@@ -444,16 +472,23 @@ class WindowEmitter:
             if self.emitfn and (self.emit_empty or not batch_df.isEmpty()):
                 self.emitfn(batch_df, batch_id)
             return
-        # Arrow toPandas + a DRIVER-side sort + zip-built dicts: measured
-        # 4.6x faster than orderBy().collect() + asDict() at 1M rows
-        # (2.6 s vs 12.1 s) — the global Spark sort and per-Row
-        # deserialization were the cost, and (created, seq) ordering only
-        # matters on the materialized list anyway. limit(cap+1) fetches
-        # arbitrary rows (no order) — fine: they are only counted, and an
-        # over-cap batch raises before any windowing.
+        # The query streamed only this batch's buffer file names; read the
+        # files here with pyarrow (no message crosses the JVM, and
+        # ``created`` stays the stored naive-UTC value on any session time
+        # zone). The buffer is flat and holds only the Stream's own part
+        # files, so each file is its basename under buffer_dir; the path
+        # strings are Hadoop's, which are not URL-encoded, so they are not
+        # decoded. The cap is checked on parquet footers before any row is
+        # read. No partitioning: a ``k=v`` segment in the base dir must not
+        # become a column. (created, seq) order only matters on the
+        # materialized list, so the sort runs here, not in Spark.
+        paths = [
+            os.path.join(self.stream.buffer_dir, os.path.basename(r.path))
+            for r in batch_df.collect()
+        ]
         if self.max_collect_rows is not None:
-            pdf = batch_df.limit(self.max_collect_rows + 1).toPandas()
-            if len(pdf) > self.max_collect_rows:
+            n = sum(pq.read_metadata(p).num_rows for p in paths)
+            if n > self.max_collect_rows:
                 raise RuntimeError(
                     f"{self.name}: micro-batch exceeds max_collect_rows="
                     f"{self.max_collect_rows} on the driver-materializing "
@@ -465,8 +500,7 @@ class WindowEmitter:
                     "max_collect_rows explicitly (max_collect_rows=None "
                     "disables the guard)."
                 )
-        else:
-            pdf = batch_df.toPandas()
+        pdf = pq.read_table(paths, schema=ARROW_SCHEMA, partitioning=None).to_pandas()
         pdf = pdf.sort_values(["created", "seq"])
         # plain datetimes, NOT pd.Timestamp: Timestamp.timestamp() reads a
         # naive value as UTC while datetime.timestamp() reads it as local
@@ -511,14 +545,22 @@ class WindowEmitter:
         then flushes remaining carry as final windows.
         """
         self.stream.flush()
-        reader = (
-            _driver_listing_session(spark)
-            .readStream.schema(SPARK_DDL)
-            .option("maxFilesPerTrigger", 1000)
+        reader = _driver_listing_session(spark).readStream.option(
+            "maxFilesPerTrigger", 1000
         )
         if self.clean_source:
             reader = reader.option("cleanSource", "delete")
-        source = _on_session(spark, reader.parquet(self.stream.buffer_dir))
+        if self.as_dataframe:
+            df = reader.schema(SPARK_DDL).parquet(self.stream.buffer_dir)
+        else:
+            # file names only: _on_batch reads the files on the driver
+            df = (
+                reader.schema(_BINARY_FILE_DDL)
+                .format("binaryFile")
+                .load(self.stream.buffer_dir)
+                .select("path")
+            )
+        source = _on_session(spark, df)
         writer = (
             source.writeStream.foreachBatch(self._on_batch)
             .option("checkpointLocation", os.path.join(self.checkpoint_dir, "spark"))

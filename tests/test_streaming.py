@@ -16,6 +16,7 @@ deterministic replacement for the reference's sleep-based polling loops.
 """
 
 import json
+import os
 import time
 from datetime import datetime, timedelta
 
@@ -1011,3 +1012,209 @@ def test_emitter_query_runs_on_the_caller_session(spark, tmp_path):
         spark.catalog.dropTempView("caller_view")
     assert m["input_rows"] == 4
     assert got == [3]
+
+
+# -- driver-side buffer reads ------------------------------------------------
+
+
+def _spy_read_table(monkeypatch):
+    """Record the paths of every ``pyarrow.parquet.read_table`` call."""
+    import pyarrow.parquet as pq
+
+    calls = []
+    real = pq.read_table
+
+    def spy(source, *args, **kwargs):
+        calls.append(list(source))
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", spy)
+    return calls
+
+
+def test_materializing_batch_reads_its_files_once(spark, tmp_path, monkeypatch):
+    """The materializing path streams file names: each micro-batch's
+    ``numInputRows`` is its buffer-file count, and the driver reads exactly
+    those files, once."""
+    calls = _spy_read_table(monkeypatch)
+    s = _mk(tmp_path, name="paths", batchsize=2)
+    seen = []
+    for n_files in (5, 3):  # two runs on one checkpoint
+        start = len(seen)
+        old = set(s._buffer_files())  # cleanSource deletes a batch's files later
+        for i in range(2 * n_files):
+            s.append({"i": start + i})
+        s.flush()
+        files = {os.path.join(s.buffer_dir, f) for f in set(s._buffer_files()) - old}
+        assert len(files) == n_files
+        n_calls = len(calls)
+        em = CountWindow(s, emitfn=lambda w: seen.extend(d["i"] for d in w.data),
+                         size=2, name="paths-em")
+        em.run(spark, available_now=True)
+        batch_calls = calls[n_calls:]
+        inputs = [p["numInputRows"] for p in em._query.recentProgress
+                  if p["numInputRows"] > 0]
+        assert inputs == [len(c) for c in batch_calls if c]
+        read = [p for c in batch_calls for p in c]
+        assert sorted(read) == sorted(files)
+    assert seen == list(range(16))
+
+
+def test_base_dir_with_space_percent_and_key_value_segment(spark, tmp_path):
+    """Buffer paths are used as the names Spark lists, never URL-decoded,
+    and a ``k=v`` directory above the buffer is not read as a partition
+    column: every row drains exactly once with its own ``stream`` value."""
+    s = Stream("odd", base_dir=str(tmp_path / "a b%20c" / "stream=elsewhere"))
+    for i in range(6):
+        s.append({"i": i})
+    seen, streams = [], []
+
+    def record(rows):
+        streams.extend(r["stream"] for r in rows)
+        return rows
+
+    em = CountWindow(s, emitfn=lambda w: seen.append([d["i"] for d in w.data]),
+                     processfn=record, size=2)
+    em.run(spark, available_now=True)
+    assert seen == [[0, 1], [2, 3], [4, 5]]
+    assert streams == ["odd"] * 6
+
+
+def test_max_collect_rows_checked_on_footers_before_any_read(spark, tmp_path, monkeypatch):
+    """An over-cap batch fails with the unchanged message before a single
+    buffer row is read."""
+    from pyspark.errors import StreamingQueryException
+
+    calls = _spy_read_table(monkeypatch)
+    s = _mk(tmp_path, name="capfoot")
+    for i in range(8):
+        s.append({"i": i})
+    em = CountWindow(s, emitfn=lambda w: None, size=2, max_collect_rows=3)
+    with pytest.raises(StreamingQueryException, match="exceeds max_collect_rows=3"):
+        em.run(spark, available_now=True)
+    assert calls == []
+
+
+def test_parquet_source_checkpoint_resumes_exactly_once(spark, tmp_path):
+    """A checkpoint first advanced by a plain parquet file-stream query
+    resumes under ``CountWindow``: only rows appended afterwards are
+    emitted, each exactly once."""
+    from minibatch_spark.streaming.models import SPARK_DDL
+
+    s = _mk(tmp_path, name="resume")
+    for i in range(4):
+        s.append({"i": i})
+    s.flush()
+    em = CountWindow(s, emitfn=None, size=2, name="resume-em", clean_source=False)
+    consumed = []
+    q = (
+        spark.readStream.schema(SPARK_DDL)
+        .parquet(s.buffer_dir)
+        .writeStream.foreachBatch(
+            lambda df, _: consumed.extend(json.loads(r.data)["i"] for r in df.collect())
+        )
+        .option("checkpointLocation", os.path.join(em.checkpoint_dir, "spark"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sorted(consumed) == [0, 1, 2, 3]
+    for i in range(4, 10):
+        s.append({"i": i})
+    seen = []
+    em.emitfn = lambda w: seen.append([d["i"] for d in w.data])
+    em.run(spark, available_now=True)
+    assert seen == [[4, 5], [6, 7], [8, 9]]
+
+
+@pytest.mark.parametrize(
+    "payloads",
+    [
+        [{"a": [1, [2, {"b": None}]], "c": {"d": [True, False]}}, [], {}, 3, "s", None],
+        [{"t": "héllo ☃ 日本"}, " \u0000", {"e": "\\\"q\\\""}],
+        [float("nan"), {"x": float("inf")}, -0.0, 1e308],
+        [",", "[", "]", "],[", {"k": "a,b]["}, "\"", "{}"],
+    ],
+)
+def test_one_call_decode_matches_per_row(payloads):
+    """Decoding a window's payloads in one call equals per-row
+    ``json.loads`` on every payload ``Stream.append`` writes."""
+    from minibatch_spark.streaming.window import _decode_payloads
+
+    data = [json.dumps(p) for p in payloads]
+    assert json.dumps(_decode_payloads(data)) == json.dumps([json.loads(d) for d in data])
+
+
+@pytest.mark.parametrize("bad", ['{"a": 1', "1, 2", "", "[1] [2]"])
+def test_one_call_decode_malformed_payload_raises(bad):
+    """A malformed payload raises ``JSONDecodeError``, as per-row decoding
+    does, also when the joined text would parse."""
+    from minibatch_spark.streaming.window import _decode_payloads
+
+    with pytest.raises(json.JSONDecodeError):
+        _decode_payloads(['{"ok": 1}', bad, "2"])
+
+
+def test_drain_until_quiet_waits_for_every_window(spark, tmp_path):
+    """``drain_until_quiet`` on a live ``CountWindow`` returns only after
+    every appended row has been emitted: a batch's file count keeps
+    ``numInputRows`` above zero."""
+    import threading
+
+    from minibatch_spark.streaming.drain import await_condition, drain_until_quiet
+
+    s = _mk(tmp_path, name="drainwin")
+    seen = []
+    em = CountWindow(s, emitfn=lambda w: seen.extend(d["i"] for d in w.data),
+                     size=1, name="drainwin-em")
+    em.run(spark, blocking=False, trigger_seconds=0.2)
+    try:
+        s.append({"i": 0})
+        s.flush()
+        assert await_condition(lambda: len(seen) == 1, timeout=60)
+
+        def produce():
+            for i in range(1, 21):
+                s.append({"i": i})
+                time.sleep(0.1)
+
+        producer = threading.Thread(target=produce)
+        producer.start()
+        assert drain_until_quiet(em._query, quiet_seconds=3.0, timeout=120)
+        producer.join()
+        assert sorted(seen) == list(range(21))
+    finally:
+        em.stop()
+
+
+def test_window_times_ignore_session_time_zone(spark, tmp_path):
+    """``created`` is the appended naive-UTC value on a session whose time
+    zone is not UTC: ``Window.query`` bounds, ``FixedTimeWindow`` buckets
+    and ``last_read`` equal the appended values."""
+    t0 = datetime(2026, 1, 1, 12, 0, 0)
+    before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        s = _mk(tmp_path, name="tzcount")
+        for i in range(4):
+            s.append({"i": i}, created=t0 + timedelta(seconds=i))
+        wins = []
+        CountWindow(s, emitfn=wins.append, size=2).run(spark, available_now=True)
+        assert [w.query for w in wins] == [
+            [(t0 + timedelta(seconds=k)).isoformat(),
+             (t0 + timedelta(seconds=k + 1)).isoformat()] for k in (0, 2)
+        ]
+        assert s.meta()["last_read"] == (t0 + timedelta(seconds=3)).isoformat()
+
+        f = _mk(tmp_path, name="tzfixed")
+        for sec in (0, 1, 10):
+            f.append({"sec": sec}, created=t0 + timedelta(seconds=sec))
+        buckets = []
+        em = FixedTimeWindow(f, emitfn=lambda w: buckets.append([d["sec"] for d in w.data]),
+                             interval=5)
+        em.run(spark, available_now=True)
+        assert buckets == [[0, 1], [], [10]]
+        assert em.carry_meta["high_water"] == em._bucket(t0 + timedelta(seconds=10))
+        assert f.meta()["last_read"] == (t0 + timedelta(seconds=10)).isoformat()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
