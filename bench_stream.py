@@ -20,10 +20,11 @@ each):
                         DataFrame (windows = micro-batches here).
 - stateful_count        applyInPandasWithState CountWindow: remainder in
                         the engine state store, output as rows to a parquet
-                        sink (fully distributed; no driver loop).
-- tws_count             transformWithStateInPandas CountWindow (Spark 4
-                        arbitrary state, RocksDB provider) — same contract,
-                        new API + state backend.
+                        sink (fully distributed; no driver loop);
+                        ``_16keys`` spreads the rows over 16 stream keys.
+- session_window, sliding_window, ivf_ingest
+                        SessionWindow and SlidingTimeWindow emitters, and
+                        streaming IVF index ingest.
 
 Timing covers query start -> availableNow termination (+ final carry drain
 for the foreachBatch paths). Producer time (writing the 1M-row buffer) is
@@ -192,44 +193,6 @@ def main() -> None:
     assert windows == (N_ROWS // n_keys // WINDOW) * n_keys, windows
     record("stateful_count_16keys", wall, windows)
 
-    # -- 4. transformWithStateInPandas (RocksDB) --------------------------
-    from minibatch_spark.compat import ensure_protobuf
-
-    if ensure_protobuf():
-        from minibatch_spark.streaming.stateful import (
-            rocksdb_state_store,
-            tws_count_window,
-        )
-
-        s = Stream("bs-tws", base_dir=base)
-        produce(s, N_ROWS)
-        sink = os.path.join(base, "sink-tws")
-        with rocksdb_state_store(spark):
-            wall = run_sink_query(
-                spark,
-                tws_count_window(s, spark, size=WINDOW),
-                os.path.join(base, "ck-tws"),
-                sink,
-            )
-        windows = spark.read.parquet(sink).count()
-        assert windows == N_ROWS // WINDOW, windows
-        record("tws_count", wall, windows)
-
-        # -- 4b. TWS, 16 parallel stream keys ----------------------------
-        s = Stream("bs-tws16", base_dir=base)
-        produce(s, N_ROWS, n_keys=n_keys)
-        sink = os.path.join(base, "sink-tws16")
-        with rocksdb_state_store(spark):
-            wall = run_sink_query(
-                spark,
-                tws_count_window(s, spark, size=WINDOW),
-                os.path.join(base, "ck-tws16"),
-                sink,
-            )
-        windows = spark.read.parquet(sink).count()
-        assert windows == (N_ROWS // n_keys // WINDOW) * n_keys, windows
-        record("tws_count_16keys", wall, windows)
-
     # -- 5. SessionWindow (keyless, gap-separated runs) -------------------
     # the round-6 emitters get throughput rows (round-6 verdict #4): a
     # regression in the session partitioner or the carry path shows up
@@ -337,31 +300,6 @@ def main() -> None:
         "rows": N_ROWS,
         "window_size": WINDOW,
     }
-    # TWS-vs-AIP bound, pinned (round-5 verdict #7): tools/profile_tws.py
-    # isolates the gap to the TWS framework data path itself — a NO-OP
-    # TWS processor (zero state ops, zero user logic) already runs ~30%
-    # slower than a no-op applyInPandasWithState (97k vs 126k rows/s at
-    # 1M rows), per-chunk protobuf framing this container pays in
-    # pure-python protobuf; RocksDB is NOT the cost (the provider
-    # measured FASTER than HDFS-backed on the same query), and larger
-    # Arrow chunks make both paths slower. So TWS buys timers/TTL, not
-    # throughput — applyInPandasWithState is the throughput default.
-    # The regressed flag keeps the bound honest: a pyspark upgrade that
-    # closes (or blows up) the gap shows up in the artifact, not a
-    # silently stale docstring. The JSON is printed FIRST — wall-clock
-    # ratios of two streaming runs are variance-prone on a loaded host,
-    # and a noisy run must not cost the whole bench artifact — then a
-    # non-zero exit signals the regression to any caller that checks.
-    regressed = False
-    if "tws_count" in scenarios:
-        ratio = round(
-            scenarios["tws_count"]["wall_sec"]
-            / scenarios["stateful_count"]["wall_sec"],
-            2,
-        )
-        out["tws_over_aip_wall_ratio"] = ratio
-        regressed = ratio >= 3.0
-        out["tws_ratio_regressed"] = regressed
     # Emitter-overhead bounds (round-6 verdict #4): both new emitters ride
     # the SAME driver-materializing foreachBatch path as
     # countwindow_collect, so their cost is that baseline plus the
@@ -387,24 +325,18 @@ def main() -> None:
     )
     out["count_over_sliding_per_row_ratio"] = slide_ratio
     out["emitter_ratio_regressed"] = sess_ratio >= 3.0 or slide_ratio >= 5.0
-    regressed = regressed or out["emitter_ratio_regressed"]
+    # the JSON is printed FIRST — wall-clock ratios of streaming runs are
+    # variance-prone on a loaded host, and a noisy run must not cost the
+    # whole bench artifact — then a non-zero exit signals the regression
     print(json.dumps(out))
-    if regressed:
-        if out.get("tws_ratio_regressed"):
-            print(
-                f"WARN: TWS at {out['tws_over_aip_wall_ratio']}x "
-                "applyInPandasWithState wall (historical bound ~1.3-2.2x; "
-                "see tools/profile_tws.py)",
-                file=sys.stderr,
-            )
-        if out.get("emitter_ratio_regressed"):
-            print(
-                f"WARN: emitter overhead regressed — session/collect "
-                f"{out['session_over_count_wall_ratio']}x (bound 3.0), "
-                f"collect/sliding per-row "
-                f"{out['count_over_sliding_per_row_ratio']}x (bound 5.0)",
-                file=sys.stderr,
-            )
+    if out["emitter_ratio_regressed"]:
+        print(
+            f"WARN: emitter overhead regressed — session/collect "
+            f"{out['session_over_count_wall_ratio']}x (bound 3.0), "
+            f"collect/sliding per-row "
+            f"{out['count_over_sliding_per_row_ratio']}x (bound 5.0)",
+            file=sys.stderr,
+        )
         sys.exit(1)
 
 

@@ -10,10 +10,9 @@ through MongoDB) re-expressed on the engine:
 2. watermarked tumbling aggregation (append mode): windows finalize
    exactly once when the watermark passes, late rows are dropped by the
    engine — no emitter code at all;
-3. event-time windows closed by transformWithState TIMERS: buckets live
-   in the checkpointed state store and emit when the watermark passes
-   their end (needs the protobuf runtime; the stop prints SKIPPED where
-   unavailable).
+3. event-time windows closed by GroupState event-time TIMEOUTS: buckets
+   live in the checkpointed state store and emit when the watermark
+   passes their end.
 
 Run:  python examples/streaming_tour.py
 """
@@ -79,24 +78,19 @@ def main() -> None:
     )
     print(f"2. watermarked agg finalized windows: {finalized}")
 
-    # -- 3. timer-closed event-time windows (transformWithState) -------
-    from minibatch_spark.compat import ensure_protobuf
+    # -- 3. timeout-closed event-time windows (applyInPandasWithState) --
+    from minibatch_spark.streaming.stateful import stateful_time_window
 
-    if not ensure_protobuf():
-        print("3. tws timers: SKIPPED (no protobuf runtime)")
-        return
-    from minibatch_spark.streaming.stateful import tws_time_window
-
-    s3 = Stream("tour-tws", base_dir=workdir)
+    s3 = Stream("tour-time", base_dir=workdir)
     for sec in (1, 3, 12, 25):
         s3.append({"t": sec}, created=T0 + timedelta(seconds=sec))
     s3.flush()
-    sink3 = os.path.join(workdir, "tws-sink")
+    sink3 = os.path.join(workdir, "time-sink")
     run_available_now(
-        tws_time_window(s3, spark, 10),
-        os.path.join(workdir, "tws-ckpt"),
+        stateful_time_window(s3, spark, 10),
+        os.path.join(workdir, "time-ckpt"),
         sink_dir=sink3,
-        query_name="tour_tws",
+        query_name="tour_time",
     )
     closed = sorted(
         (r.window_start, r.n) for r in read_sink(spark, sink3).collect()

@@ -83,12 +83,6 @@ def get_spark(
     matching SparkSession.builder semantics — so tests and the driver can
     share one JVM.
     """
-    # before the JVM exists: local-mode Python workers inherit the
-    # driver environment, so the protobuf shim must land first for
-    # transformWithState to find its runtime (no-op when already present)
-    from minibatch_spark.compat import ensure_protobuf
-
-    ensure_protobuf()
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{_cpus()}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)

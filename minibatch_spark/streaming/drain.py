@@ -1,8 +1,10 @@
 """Bounded drain helpers for live-trigger streaming tests and shutdowns.
 
-Processing-time-mode features (e.g. state TTL, ``tws_count_window
-(state_ttl_ms=...)``) cannot run under ``Trigger.AvailableNow`` — the TTL
-clock needs a live trigger, and a live query never terminates on its own.
+Processing-time-mode features (e.g. state TTL, ``stateful_count_window
+(state_ttl_ms=...)``) cannot run under ``Trigger.AvailableNow``: a
+``ProcessingTimeTimeout`` query runs a no-data batch on every trigger to
+check its timeouts, so it never terminates, and a live query never
+terminates on its own either.
 These helpers bound such runs deterministically instead of hand-rolled
 ``sleep`` loops:
 

@@ -1,11 +1,12 @@
-"""Stateful CountWindow on the engine's own state store
+"""Stateful windows on the engine's own state store
 (``applyInPandasWithState``) — the fully-distributed alternative to the
 foreachBatch carry in streaming/window.py.
 
 The reference's CountWindow keeps its remainder implicitly in MongoDB
-(``processed=False`` rows left behind, minibatch/window.py:305-327). The
-foreachBatch port keeps it in a driver-side carry file. THIS version puts
-the remainder where Structured Streaming puts state: the checkpointed,
+(``processed=False`` rows left behind, minibatch/window.py:305-327) and
+closes time windows with a driver-side flusher (:252-262). The
+foreachBatch port keeps both in a driver-side carry file. THIS version
+puts the state where Structured Streaming puts it: the checkpointed,
 per-key, executor-local state store —
 
 - partitioned by stream key, so a thousand streams batch in parallel with
@@ -19,24 +20,22 @@ Windows are emitted as ROWS (stream, window_id, n, data_json), which keeps
 the operator composable: downstream DataFrame ops, sinks, and the DuckDB
 harness all consume a flat schema instead of driver-side Window objects.
 
-Choosing between the two state APIs (profiled, tools/profile_tws.py at
-1M rows / 1 key): ``applyInPandasWithState`` is the THROUGHPUT default —
-a no-op transformWithStateInPandas processor (zero state ops) already
-runs ~30% slower than a no-op applyInPandasWithState (97k vs 126k
-rows/s), so the gap is the TWS framework data path (per-chunk protobuf
-round-trips to the state server; pure-python protobuf runtime here), not
-our processor code, not RocksDB (the RocksDB provider measured FASTER
-than the HDFS-backed default on the identical query: 8.5s vs 10.3s), and
-not Arrow chunking (20x larger chunks made both paths slower). Reach for
-``tws_*`` when you need what only it has: engine-closed event-time
-timers, per-state-variable TTL, and typed named state. The ratio is
-asserted in bench_stream.py so an upstream shift re-surfaces.
+One backend, two GroupState timeouts:
+
+- ``stateful_count_window(state_ttl_ms=...)``: a ``ProcessingTimeTimeout``
+  abandons a partial-window remainder that saw no data for the TTL;
+- ``stateful_time_window``: an ``EventTimeTimeout`` closes event-time
+  buckets once the watermark passes their end.
+
+Gotcha: a ``ProcessingTimeTimeout`` query runs a no-data batch on every
+trigger to check its timeouts, so under ``Trigger.AvailableNow`` it never
+terminates. That is why only a TTL turns the timeout on; run TTL queries
+on a processing-time trigger (``streaming/drain.py`` bounds such runs).
 """
 
 from __future__ import annotations
 
 import json
-from contextlib import contextmanager
 from typing import TYPE_CHECKING, Iterable, Iterator, Tuple
 
 import pandas as pd
@@ -49,10 +48,27 @@ if TYPE_CHECKING:  # pragma: no cover
 OUTPUT_DDL = "stream string, window_id long, n long, data_json string"
 # remainder rows + the next window ordinal, all checkpoint-versioned
 STATE_DDL = "pending string, next_window long"
+TIME_OUTPUT_DDL = "stream string, window_start timestamp, n long, data_json string"
+# open buckets as JSON {bucket start ms: [payload, ...]}
+TIME_STATE_DDL = "buckets string"
+
+
+def _sorted_batch(pdfs: Iterable[pd.DataFrame]) -> "pd.DataFrame | None":
+    # concat THEN sort: the iterator may deliver a key's micro-batch rows
+    # in several Arrow chunks, and (created, seq) order must hold across
+    # all of them, not within each
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return None
+    return pd.concat(chunks).sort_values(["created", "seq"])
 
 
 def _chunk(
-    key: Tuple[str], pdfs: Iterable[pd.DataFrame], state, size: int
+    key: Tuple[str],
+    pdfs: Iterable[pd.DataFrame],
+    state,
+    size: int,
+    state_ttl_ms: int | None = None,
 ) -> Iterator[pd.DataFrame]:
     rows = []
     if state.exists:
@@ -60,12 +76,12 @@ def _chunk(
         rows = json.loads(pending) if pending else []
     else:
         next_window = 0
-    # concat THEN sort: the iterator may deliver a key's micro-batch rows
-    # in several Arrow chunks, and (created, seq) order must hold across
-    # all of them, not within each
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        batch = pd.concat(chunks).sort_values(["created", "seq"])
+    if state_ttl_ms and state.hasTimedOut:
+        # the remainder saw no data for the TTL: abandon it, but keep the
+        # ordinal so later windows keep monotonic ids
+        rows = []
+    batch = _sorted_batch(pdfs)
+    if batch is not None:
         rows.extend(batch["data"].tolist())
     out = []
     while len(rows) >= size:
@@ -73,276 +89,103 @@ def _chunk(
         out.append((key[0], next_window, len(window), json.dumps(window)))
         next_window += 1
     state.update((json.dumps(rows), next_window))
+    if state_ttl_ms and rows:
+        state.setTimeoutDuration(state_ttl_ms)
     if out:
         yield pd.DataFrame(out, columns=["stream", "window_id", "n", "data_json"])
 
 
-def stateful_count_window(stream: Stream, spark, size: int) -> "DataFrame":
+def stateful_count_window(
+    stream: Stream, spark, size: int, state_ttl_ms: int | None = None
+) -> "DataFrame":
     """Streaming DataFrame of exactly-``size`` windows per stream key.
 
     The 10-messages/size-2 ⇒ exactly-5-windows invariant (reference
     tests/test_minibatch.py:48-87) holds across micro-batch boundaries and
     restarts because the remainder lives in the state store, not in any
-    single batch."""
+    single batch.
+
+    ``state_ttl_ms``: optional state TTL (the reference's TTL
+    housekeeping, minibatch/models.py:327-338, on engine state instead of
+    buffer files): a partial-window remainder that sees no new data for
+    the TTL is dropped, so permanently quiet keys cannot hold state
+    forever at 1000-stream scale. The window ordinal survives. A TTL
+    turns on ``ProcessingTimeTimeout``, which never ends an
+    ``availableNow`` query (see the module docstring); 0 or None means no
+    TTL."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     src = spark.readStream.schema(SPARK_DDL).parquet(stream.buffer_dir)
     return src.groupBy("stream").applyInPandasWithState(
-        lambda key, pdfs, state: _chunk(key, pdfs, state, size),
+        lambda key, pdfs, state: _chunk(key, pdfs, state, size, state_ttl_ms),
         outputStructType=OUTPUT_DDL,
         stateStructType=STATE_DDL,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        timeoutConf=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if state_ttl_ms
+            else GroupStateTimeout.NoTimeout
+        ),
     )
 
 
-class _CountWindowProcessor:
-    """``StatefulProcessor`` emitting exactly-``size`` windows per key —
-    the transformWithState (Spark 4 arbitrary-state API) form of
-    ``stateful_count_window``. Same contract, richer state model: the
-    remainder and the window ordinal live in named, typed state variables
-    (``getValueState``) instead of one packed tuple, and the API adds
-    timers/TTL hooks the old API lacks (exercised by the sibling
-    ``_TimeWindowProcessor``, which closes event-time buckets on timers).
-    """
-
-    def __init__(self, size: int, state_ttl_ms: int | None = None):
-        self.size = size
-        self.state_ttl_ms = state_ttl_ms
-
-    def init(self, handle) -> None:
-        # TTL on the REMAINDER only: a stale partial window is abandoned
-        # after the TTL (the engine evicts the state), while the window
-        # ordinal survives so later windows keep monotonic ids
-        self._pending = handle.getValueState(
-            "pending", "rows string", ttlDurationMs=self.state_ttl_ms or None
+def _buckets(
+    key: Tuple[str], pdfs: Iterable[pd.DataFrame], state, interval_ms: int
+) -> Iterator[pd.DataFrame]:
+    buckets = json.loads(state.get[0]) if state.exists else {}
+    batch = _sorted_batch(pdfs)
+    if batch is not None:
+        # naive values are the stored UTC instants (session tz is UTC)
+        ms = batch["created"].values.astype("datetime64[ms]").astype("int64")
+        for m, data in zip(ms.tolist(), batch["data"].tolist()):
+            buckets.setdefault(str(m - m % interval_ms), []).append(data)
+    watermark = state.getCurrentWatermarkMs()
+    out = []
+    for bs in sorted(buckets, key=int):
+        if int(bs) + interval_ms > watermark:
+            break
+        rows = buckets.pop(bs)
+        out.append(
+            (key[0], pd.Timestamp(int(bs), unit="ms"), len(rows), json.dumps(rows))
         )
-        self._next = handle.getValueState("next_window", "w long")
-
-    def handleInputRows(self, key, rows, timerValues):
-        got = self._pending.get()
-        buf = json.loads(got[0]) if got and got[0] else []
-        nxt = self._next.get()
-        next_window = nxt[0] if nxt else 0
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values(["created", "seq"])
-            buf.extend(batch["data"].tolist())
-        out = []
-        while len(buf) >= self.size:
-            window, buf = buf[: self.size], buf[self.size :]
-            out.append((key[0], next_window, len(window), json.dumps(window)))
-            next_window += 1
-        self._pending.update((json.dumps(buf),))
-        self._next.update((next_window,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["stream", "window_id", "n", "data_json"]
-            )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
+    if buckets:
+        state.update((json.dumps(buckets),))
+        # above the watermark by construction: every bucket ending at or
+        # below it was just emitted
+        state.setTimeoutTimestamp(min(int(b) for b in buckets) + interval_ms)
+    else:
+        state.remove()
+    if out:
+        yield pd.DataFrame(out, columns=["stream", "window_start", "n", "data_json"])
 
 
-
-
-_STATE_STORE_CONF = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _require_rocksdb_state_store(spark) -> "str | None":
-    """TWS state lives in named column families, which only the RocksDB
-    provider supports (HDFSBackedStateStoreProvider hard-errors); the
-    conf is session-wide and read at query START. Sets the conf ONLY when
-    it differs and returns the prior value (None if unset) so callers can
-    restore it — a query RESTARTED from a checkpoint written under the
-    default provider must keep its original provider. The tws_* builders
-    return an unstarted DataFrame (the conf is read at .start()), so they
-    cannot restore themselves; use the ``rocksdb_state_store`` context
-    manager around .start() when mixing providers in one session.
-    rocksdbjni ships in the Spark 4 distribution, so this holds on a
-    bare cluster."""
-    try:
-        prior = spark.conf.get(_STATE_STORE_CONF)
-    except Exception:
-        prior = None
-    if prior != _ROCKSDB_PROVIDER:
-        spark.conf.set(_STATE_STORE_CONF, _ROCKSDB_PROVIDER)
-    return prior
-
-
-@contextmanager
-def rocksdb_state_store(spark):
-    """Scope the RocksDB state-store provider to a block: set it (if it
-    differs), yield, then restore the prior session value — including
-    unsetting when it was never set. Start TWS queries INSIDE the block
-    (the conf is read at query start); queries already started keep
-    whatever provider they started with.
-
-    >>> with rocksdb_state_store(spark):
-    ...     q = tws_count_window(stream, spark, size=5) \\
-    ...         .writeStream.foreachBatch(fn).start()
-    """
-    prior = _require_rocksdb_state_store(spark)
-    try:
-        yield
-    finally:
-        if prior is None:
-            spark.conf.unset(_STATE_STORE_CONF)
-        elif prior != _ROCKSDB_PROVIDER:
-            spark.conf.set(_STATE_STORE_CONF, prior)
-
-def tws_count_window(
-    stream: Stream, spark, size: int, state_ttl_ms: int | None = None
+def stateful_time_window(
+    stream: Stream, spark, interval_seconds: float
 ) -> "DataFrame":
-    """``stateful_count_window`` on the transformWithStateInPandas API —
-    Spark 4's arbitrary-state operator (the successor to
-    applyInPandasWithState). Identical window semantics; kept alongside
-    the old-API version so both state backends are exercised.
+    """Tumbling event-time windows per stream key, closed by the engine —
+    the capability the reference's FixedTimeWindow approximates with a
+    driver-side wall-clock flusher thread (minibatch/window.py:252-256).
 
-    ``state_ttl_ms``: optional state TTL (the W12 retention contract on
-    engine state instead of buffer files — reference TTL housekeeping,
-    minibatch/models.py:327-338): a partial-window remainder that sees no
-    new data for the TTL is EVICTED by the state store, so permanently
-    quiet keys cannot accumulate state forever at 1000-stream scale.
-    Requires processing-time mode (the TTL clock), enabled automatically.
+    Each row lands in its floor(created/interval) bucket (checkpointed
+    state); a bucket emits once the WATERMARK passes its end, either when
+    new data for the key arrives or when the key's event-time timeout
+    (the earliest open bucket end) fires. The watermark has a 0 s delay:
+    the reference drops late rows rather than wait (:258-262), and Spark
+    drops rows below the watermark before they reach the state, so a
+    closed bucket never re-opens. Restarts resume with open buckets
+    intact — no driver thread, no clock races, per-key parallel."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    Runtime requirements beyond the old API (why the test may skip):
-    - RocksDB state store (``spark.sql.streaming.stateStore.providerClass
-      = ...state.RocksDBStateStoreProvider``) — TWS does not run on the
-      default HDFS-backed provider;
-    - a working ``google.protobuf`` (the Python state server speaks
-      protobuf to the JVM); this container ships a broken protobuf, so
-      tests/test_streaming_agg.py gates on importing it."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass dynamically so the module imports even on Spark builds
-    # without the TWS API (the function then fails at call time, not
-    # import time); mixin FIRST so its concrete methods win the MRO over
-    # StatefulProcessor's abstract ones
-    proc_cls = type(
-        "_CountWindowTWS", (_CountWindowProcessor, StatefulProcessor), {}
-    )
-    # ttl=0 means "no TTL" (pyspark transmits any non-None ttlDurationMs,
-    # and a 0 TTL with timeMode='none' is rejected at processor init)
-    state_ttl_ms = state_ttl_ms or None
-    proc = proc_cls(size, state_ttl_ms)
-    _require_rocksdb_state_store(spark)
-    src = spark.readStream.schema(SPARK_DDL).parquet(stream.buffer_dir)
-    return src.groupBy("stream").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=OUTPUT_DDL,
-        outputMode="append",
-        timeMode="processingtime" if state_ttl_ms else "none",
-    )
-
-
-TIME_OUTPUT_DDL = "stream string, window_start timestamp, n long, data_json string"
-
-
-class _TimeWindowProcessor:
-    """Event-time tumbling windows closed by TWS TIMERS — the capability
-    the reference's FixedTimeWindow approximates with a driver-side
-    wall-clock flusher thread (minibatch/window.py:252-256) and the
-    foreachBatch port mirrors the same way. Here the engine itself closes
-    windows: each incoming row lands in its floor(event_time/interval)
-    bucket (ValueState, checkpoint-versioned) and registers an event-time
-    timer at the bucket end; when the WATERMARK passes a timer, Spark
-    calls handleExpiredTimer on the owning key's partition and the bucket
-    emits — no driver thread, no clock races, per-key parallel at any
-    number of streams, and late rows for a closed bucket simply create no
-    state (the watermark already passed; the drop is the same contract as
-    FixedTimeWindow's high-water guard)."""
-
-    def __init__(self, interval_ms: int):
-        self.interval_ms = interval_ms
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self._buckets = handle.getValueState("buckets", "b string")
-
-    def _load(self) -> dict:
-        got = self._buckets.get()
-        return json.loads(got[0]) if got and got[0] else {}
-
-    def handleInputRows(self, key, rows, timerValues):
-        buckets = self._load()
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values(["created", "seq"])
-            touched = set()
-            for created, data in zip(batch["created"], batch["data"]):
-                ms = int(pd.Timestamp(created).value // 1_000_000)
-                b = ms - ms % self.interval_ms
-                buckets.setdefault(str(b), []).append(data)
-                touched.add(b)
-            # one registerTimer per DISTINCT bucket, not per row — each
-            # call is a protobuf round-trip to the state server, and a
-            # 10k-row batch in one bucket must not issue 10k identical
-            # RPCs. A re-registered timer on an already-emptied bucket
-            # fires into a no-op, so re-touching a bucket stays safe.
-            for b in touched:
-                self.handle.registerTimer(b + self.interval_ms)
-        self._buckets.update((json.dumps(buckets),))
-        return iter(())
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        expiry = expiredTimerInfo.getExpiryTimeInMs()
-        buckets = self._load()
-        out = []
-        for bs in sorted(buckets, key=int):
-            if int(bs) + self.interval_ms <= expiry:
-                rows = buckets.pop(bs)
-                out.append(
-                    (
-                        key[0],
-                        pd.Timestamp(int(bs), unit="ms"),
-                        len(rows),
-                        json.dumps(rows),
-                    )
-                )
-        self._buckets.update((json.dumps(buckets),))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["stream", "window_start", "n", "data_json"]
-            )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def tws_time_window(stream: Stream, spark, interval_seconds: float) -> "DataFrame":
-    """Tumbling event-time windows per stream key, closed by engine
-    timers (transformWithStateInPandas, timeMode='eventtime'). The
-    watermark (0s delay: the reference drops late rows rather than wait,
-    minibatch/window.py:258-262) drives timer expiry; buckets live in the
-    checkpointed state store, so restarts resume with open buckets
-    intact — the FixedTimeWindow contract with zero driver-side
-    machinery."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    _require_rocksdb_state_store(spark)
-    proc_cls = type("_TimeWindowTWS", (_TimeWindowProcessor, StatefulProcessor), {})
-    proc = proc_cls(int(interval_seconds * 1000))
+    interval_ms = int(interval_seconds * 1000)
     src = (
         spark.readStream.schema(SPARK_DDL)
         .parquet(stream.buffer_dir)
         .withWatermark("created", "0 seconds")
     )
-    return src.groupBy("stream").transformWithStateInPandas(
-        statefulProcessor=proc,
+    return src.groupBy("stream").applyInPandasWithState(
+        lambda key, pdfs, state: _buckets(key, pdfs, state, interval_ms),
         outputStructType=TIME_OUTPUT_DDL,
+        stateStructType=TIME_STATE_DDL,
         outputMode="append",
-        timeMode="eventtime",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

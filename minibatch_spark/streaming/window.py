@@ -75,6 +75,7 @@ visible, later ones are not).
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -170,6 +171,16 @@ class WindowEmitter:
     Strategies needing cross-batch state beyond carried rows read/write
     ``self.carry_meta`` (persisted with the carry file, e.g.
     FixedTimeWindow's high-water bucket).
+
+    ``clean_source=True`` (default) deletes consumed buffer files, as the
+    reference's commit() deletes consumed buffer docs (window.py:129-136,
+    single-emitter constraint :63-69). Spark's ``cleanSource=delete``
+    removes a batch's files only when the next batch is built, so an
+    ``available_now`` run removes its last batch's files itself once the
+    query ends cleanly. With ``as_dataframe=True`` the emitter never sees
+    file names: the last batch's files stay until the next run's first
+    batch. Multi-consumer setups pass ``clean_source=False`` — each query
+    has its own offsets.
     """
 
     def __init__(
@@ -200,11 +211,9 @@ class WindowEmitter:
         self.emit_empty = emit_empty
         self.keep = keep
         self.as_dataframe = as_dataframe
-        # reference commit() always deletes consumed buffer docs
-        # (window.py:129-136, single-emitter constraint :63-69); the Spark
-        # file source's cleanSource=delete reproduces it. Multi-consumer
-        # setups pass clean_source=False — each query has its own offsets.
         self.clean_source = clean_source
+        # the latest materialized batch's buffer files (see clean_source)
+        self._batch_paths: list[str] = []
         self.name = name or f"{type(self).__name__}-{stream.name}"
         self.emitted: list[Window] = []  # window metadata log (small)
         self.late_dropped = 0  # rows discarded for already-emitted buckets
@@ -486,6 +495,7 @@ class WindowEmitter:
             os.path.join(self.stream.buffer_dir, os.path.basename(r.path))
             for r in batch_df.collect()
         ]
+        self._batch_paths = paths
         if self.max_collect_rows is not None:
             n = sum(pq.read_metadata(p).num_rows for p in paths)
             if n > self.max_collect_rows:
@@ -494,8 +504,8 @@ class WindowEmitter:
                     f"{self.max_collect_rows} on the driver-materializing "
                     "default path. Pass as_dataframe=True (the emit fn "
                     "receives the micro-batch DataFrame; no driver "
-                    "materialization), use stateful_count_window / "
-                    "tws_count_window (streaming/stateful.py) for "
+                    "materialization), use stateful_count_window "
+                    "(streaming/stateful.py) for "
                     "state-store windowing at scale, or raise "
                     "max_collect_rows explicitly (max_collect_rows=None "
                     "disables the guard)."
@@ -545,6 +555,7 @@ class WindowEmitter:
         then flushes remaining carry as final windows.
         """
         self.stream.flush()
+        self._batch_paths = []
         reader = _driver_listing_session(spark).readStream.option(
             "maxFilesPerTrigger", 1000
         )
@@ -573,6 +584,12 @@ class WindowEmitter:
         self._query = writer.start()
         if available_now:
             self._query.awaitTermination()
+            if self.clean_source:
+                # cleanSource deletes a batch's files only once a next
+                # batch is built, so the last batch's files are still here
+                for p in self._batch_paths:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(p)
             self._drain_final()
             self._await_emits()
             self._shutdown_pool()

@@ -1060,6 +1060,23 @@ def test_materializing_batch_reads_its_files_once(spark, tmp_path, monkeypatch):
     assert seen == list(range(16))
 
 
+def test_available_now_drain_leaves_no_buffer_files(spark, tmp_path):
+    """With clean_source (default) a drained buffer is empty, including
+    the last micro-batch's files, which Spark's cleanSource only deletes
+    once a next batch is built; a second run on the same checkpoint emits
+    only the rows appended since."""
+    s = _mk(tmp_path, name="drained", batchsize=1)
+    seen = []
+    for lo, hi in ((0, 20), (20, 24)):
+        for i in range(lo, hi):
+            s.append({"i": i})
+        em = CountWindow(s, emitfn=lambda w: seen.append([d["i"] for d in w.data]),
+                         size=2, name="drained-em")
+        em.run(spark, available_now=True)
+        assert s.buffer_count() == 0
+        assert [i for w in seen for i in w] == list(range(hi))
+
+
 def test_base_dir_with_space_percent_and_key_value_segment(spark, tmp_path):
     """Buffer paths are used as the names Spark lists, never URL-decoded,
     and a ``k=v`` directory above the buffer is not read as a partition

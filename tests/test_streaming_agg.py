@@ -185,39 +185,55 @@ def test_stream_stream_join_left_outer_emits_unmatched(spark, tmp_path):
     assert ("z", True) in got
 
 
-def test_stateful_count_window_invariant_and_restart(spark, tmp_path):
-    """applyInPandasWithState CountWindow: 10 msgs / size=2 => exactly 5
-    windows of 2 in arrival order (reference test_minibatch.py:48-87),
-    with the remainder carried in the STATE STORE across a restart.
-    File sink (not memory): the point is checkpoint recovery, which the
-    memory sink refuses."""
-    import json
-
+def _count_window_across_restart(spark, tmp_path, split):
+    """Run stateful_count_window(size=2) over messages 0..split-1, check
+    the complete windows, then restart on the same checkpoint with
+    messages split..9 and check that exactly 5 windows of 2 came out,
+    every message once, in arrival order. File sink (not memory): the
+    point is checkpoint recovery, which the memory sink refuses."""
     from minibatch_spark.streaming.stateful import stateful_count_window
 
-    s = _mk(tmp_path, name="st-cw")
-    ckpt = os.path.join(str(tmp_path), "ckpt-stcw")
-    sink = os.path.join(str(tmp_path), "sink-stcw")
-    for i in range(5):  # odd leftover after run 1: windows [0,1] [2,3], carry [4]
+    s = _mk(tmp_path, name=f"st-cw{split}")
+    ckpt = os.path.join(str(tmp_path), f"ckpt-stcw{split}")
+    sink = os.path.join(str(tmp_path), f"sink-stcw{split}")
+    for i in range(split):
         s.append({"i": i}, created=T0 + timedelta(seconds=i))
     s.flush()
     run_available_now(stateful_count_window(s, spark, size=2), ckpt,
-                      sink_dir=sink, query_name="stcw1")
+                      sink_dir=sink, query_name=f"stcw{split}a")
 
     def windows():
         rows = spark.read.parquet(sink).orderBy("window_id").collect()
         assert all(r.n == 2 for r in rows)
-        return [[json.loads(d)["i"] for d in json.loads(r.data_json)] for r in rows]
+        assert [r.window_id for r in rows] == list(range(len(rows)))
+        return [[json.loads(d)["i"] for d in json.loads(r.data_json)]
+                for r in rows]
 
-    assert windows() == [[0, 1], [2, 3]]
+    assert windows() == [[i, i + 1] for i in range(0, split - 1, 2)]
 
-    for i in range(5, 10):
+    for i in range(split, 10):
         s.append({"i": i}, created=T0 + timedelta(seconds=i))
     s.flush()
     run_available_now(stateful_count_window(s, spark, size=2), ckpt,
-                      sink_dir=sink, query_name="stcw2")
-    # restart resumes from state: carry [4] + new rows; 10 msgs => exactly 5 windows
+                      sink_dir=sink, query_name=f"stcw{split}b")
+    # restart resumes from state: carry + new rows; 10 msgs => exactly
+    # 5 windows, every message once, in order
     assert windows() == [[0, 1], [2, 3], [4, 5], [6, 7], [8, 9]]
+
+
+def test_stateful_count_window_invariant_and_restart(spark, tmp_path):
+    """applyInPandasWithState CountWindow: 10 msgs / size=2 => exactly 5
+    windows of 2 in arrival order (reference test_minibatch.py:48-87),
+    with the remainder carried in the STATE STORE across a restart. Split
+    5 then 5: windows [0,1] [2,3] before the restart, carry [4]."""
+    _count_window_across_restart(spark, tmp_path, split=5)
+
+
+def test_tws_count_window_invariant_and_restart(spark, tmp_path):
+    """The same CountWindow contract at the 7-then-3 split the former
+    transformWithState count window was tested at: 3 windows before the
+    restart, carry [6]. stateful_count_window now serves both."""
+    _count_window_across_restart(spark, tmp_path, split=7)
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
@@ -324,85 +340,31 @@ def test_stream_static_enrichment_broadcast(spark, tmp_path):
     }
 
 
-def test_tws_count_window_invariant_and_restart(spark, tmp_path):
-    """transformWithState CountWindow: 10 msgs / size=2 => exactly 5
-    windows of 2, remainder carried across a checkpoint restart (same
-    contract as the applyInPandasWithState version — reference
-    tests/test_minibatch.py:48-87).
+def test_stateful_time_window_closes_buckets(spark, tmp_path):
+    """Event-time tumbling windows closed by GroupState event-time
+    timeouts (the engine-side replacement for the reference's driver
+    wall-clock flusher, minibatch/window.py:252-256): buckets emit when
+    the WATERMARK passes their end — across runs, from checkpointed
+    state. Timeline (10s interval): run 1 loads buckets [0,10) and
+    [10,20); run 2 appends an event at +25, whose watermark closes both
+    earlier buckets."""
+    from minibatch_spark.streaming.stateful import stateful_time_window
 
-    The protobuf runtime TWS needs is wired up by compat.ensure_protobuf
-    (a vendored pure-Python runtime found on disk); SKIPS only where no
-    runtime can be found at all — the identical window contract is still
-    pinned by the applyInPandasWithState test above, which shares the
-    chunking logic."""
-    import pytest
-
-    from minibatch_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no google.protobuf runtime available: "
-                    "transformWithState state server cannot start")
-    from minibatch_spark.streaming.stateful import tws_count_window
-
-    s = _mk(tmp_path, name="tws")
-    ckpt = os.path.join(str(tmp_path), "ckpt-tws")
-    sink = os.path.join(str(tmp_path), "sink-tws")
-    for i in range(7):  # 3 windows + remainder of 1
-        s.append({"i": i}, created=T0 + timedelta(seconds=i))
-    s.flush()
-    run_available_now(
-        tws_count_window(s, spark, size=2), ckpt, sink_dir=sink, query_name="t1"
-    )
-    first = read_sink(spark, sink).collect()
-    assert sorted(r.window_id for r in first) == [0, 1, 2]
-    assert all(r.n == 2 for r in first)
-
-    for i in range(7, 10):
-        s.append({"i": i}, created=T0 + timedelta(seconds=i))
-    s.flush()
-    run_available_now(
-        tws_count_window(s, spark, size=2), ckpt, sink_dir=sink, query_name="t2"
-    )
-    rows = read_sink(spark, sink).collect()
-    assert sorted(r.window_id for r in rows) == [0, 1, 2, 3, 4]
-    seen = [
-        json.loads(r.data_json)
-        for r in sorted(rows, key=lambda r: r.window_id)
-    ]
-    flat = [json.loads(d)["i"] for w in seen for d in w]
-    assert flat == list(range(10))  # every message exactly once, in order
-
-
-def test_tws_time_window_timers_close_buckets(spark, tmp_path):
-    """Event-time tumbling windows closed by TWS TIMERS (the engine-side
-    replacement for the reference's driver wall-clock flusher,
-    minibatch/window.py:252-256): buckets emit when the WATERMARK passes
-    their end — across runs, from checkpointed state. Timeline (10s
-    interval): run 1 loads buckets [0,10) and [10,20); run 2 appends an
-    event at +25, whose watermark closes both earlier buckets."""
-    import pytest
-
-    from minibatch_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no google.protobuf runtime available")
-    from minibatch_spark.streaming.stateful import tws_time_window
-
-    s = _mk(tmp_path, name="twstime")
-    ckpt = os.path.join(str(tmp_path), "ckpt-twstime")
-    sink = os.path.join(str(tmp_path), "sink-twstime")
+    s = _mk(tmp_path, name="sttime")
+    ckpt = os.path.join(str(tmp_path), "ckpt-sttime")
+    sink = os.path.join(str(tmp_path), "sink-sttime")
     for sec, v in [(1, "a"), (3, "b"), (12, "c")]:
         s.append({"v": v}, created=T0 + timedelta(seconds=sec))
     s.flush()
     run_available_now(
-        tws_time_window(s, spark, 10), ckpt, sink_dir=sink, query_name="tw1"
+        stateful_time_window(s, spark, 10), ckpt, sink_dir=sink, query_name="tw1"
     )
     first = {r.window_start: r for r in read_sink(spark, sink).collect()}
 
     s.append({"v": "d"}, created=T0 + timedelta(seconds=25))
     s.flush()
     run_available_now(
-        tws_time_window(s, spark, 10), ckpt, sink_dir=sink, query_name="tw2"
+        stateful_time_window(s, spark, 10), ckpt, sink_dir=sink, query_name="tw2"
     )
     rows = {r.window_start: r for r in read_sink(spark, sink).collect()}
     b0, b1 = T0, T0 + timedelta(seconds=10)
@@ -417,26 +379,59 @@ def test_tws_time_window_timers_close_buckets(spark, tmp_path):
     assert set(first) <= {b0}
 
 
-def test_tws_state_ttl_abandons_stale_remainder(spark, tmp_path):
-    """state_ttl_ms: a partial-window remainder evicts after the TTL (the
-    reference's TTL housekeeping, models.py:327-338, applied to engine
-    state): 3 msgs / size=2 leave a remainder of 1; after the TTL
-    elapses, a 4th message does NOT complete a window with the evicted
+def test_stateful_time_window_drops_late_rows(spark, tmp_path):
+    """A late row for an already-closed bucket is dropped, never
+    re-emitted (the reference drops late rows, minibatch/window.py:
+    258-262). After [0,10) and [10,20) close, a row at +5 (late) and one
+    at +35 arrive together: [0,10) keeps its one output row with n=2,
+    and the +35 watermark closes [20,30) holding only "d"."""
+    from minibatch_spark.streaming.stateful import stateful_time_window
+
+    s = _mk(tmp_path, name="stlate")
+    ckpt = os.path.join(str(tmp_path), "ckpt-stlate")
+    sink = os.path.join(str(tmp_path), "sink-stlate")
+
+    def run(batch, name):
+        for sec, v in batch:
+            s.append({"v": v}, created=T0 + timedelta(seconds=sec))
+        s.flush()
+        run_available_now(
+            stateful_time_window(s, spark, 10), ckpt, sink_dir=sink,
+            query_name=name,
+        )
+        return read_sink(spark, sink).collect()
+
+    run([(1, "a"), (3, "b"), (12, "c")], "late1")
+    closed = run([(25, "d")], "late2")
+    assert sorted(r.window_start for r in closed) == [
+        T0, T0 + timedelta(seconds=10)
+    ]
+
+    rows = run([(5, "late"), (35, "e")], "late3")
+    by_start: dict = {}
+    for r in rows:
+        by_start.setdefault(r.window_start, []).append(r)
+    b0, b2 = T0, T0 + timedelta(seconds=20)
+    assert len(by_start[b0]) == 1 and by_start[b0][0].n == 2  # no re-emit
+    vals2 = [json.loads(d)["v"] for d in json.loads(by_start[b2][0].data_json)]
+    assert len(by_start[b2]) == 1 and vals2 == ["d"]
+    assert T0 + timedelta(seconds=30) not in by_start  # [30,40) still open
+
+
+def test_stateful_state_ttl_abandons_stale_remainder(spark, tmp_path):
+    """state_ttl_ms: a partial-window remainder is dropped after the TTL
+    (the reference's TTL housekeeping, models.py:327-338, applied to
+    engine state): 3 msgs / size=2 leave a remainder of 1; after the TTL
+    elapses, a 4th message does NOT complete a window with the dropped
     remainder. The control run without TTL completes it. Uses a live
-    processing-time trigger (TTL needs the processing-time clock;
+    processing-time trigger (the TTL is a processing-time timeout;
     availableNow never terminates in that mode), bounded by the drain
     helpers: await_condition for sink arrival, drain_until_quiet to prove
     no EXTRA window appears (no input consumed for the quiet period)."""
     import time as _t
 
-    import pytest
-
-    from minibatch_spark.compat import ensure_protobuf
     from minibatch_spark.streaming.drain import await_condition, drain_until_quiet
-
-    if not ensure_protobuf():
-        pytest.skip("no google.protobuf runtime available")
-    from minibatch_spark.streaming.stateful import tws_count_window
+    from minibatch_spark.streaming.stateful import stateful_count_window
 
     def run_scenario(name, ttl):
         s = _mk(tmp_path, name=name)
@@ -445,7 +440,7 @@ def test_tws_state_ttl_abandons_stale_remainder(spark, tmp_path):
             s.append({"i": i}, created=T0 + timedelta(seconds=i))
         s.flush()
         q = (
-            tws_count_window(s, spark, size=2, state_ttl_ms=ttl)
+            stateful_count_window(s, spark, size=2, state_ttl_ms=ttl)
             .writeStream.outputMode("append")
             .queryName(f"q-{name}")
             .trigger(processingTime="300 milliseconds")
@@ -487,46 +482,8 @@ def test_tws_state_ttl_abandons_stale_remainder(spark, tmp_path):
 
     # control: no TTL -> remainder 2 completes with msg 3
     assert run_scenario("ttl-off", None) == [[0, 1], [2, 3]]
-    # TTL: remainder 2 evicted; msg 3 starts a new partial window
+    # TTL: remainder 2 dropped; msg 3 starts a new partial window
     assert run_scenario("ttl-on", 500) == [[0, 1]]
-
-
-def test_rocksdb_state_store_context_restores_conf(spark):
-    """rocksdb_state_store sets the provider for the block and restores
-    the prior session value on exit — including UNSETTING when the conf
-    was never set (ADVICE: the requirer must not permanently flip the
-    session-wide provider for later checkpoint restarts)."""
-    from minibatch_spark.streaming.stateful import (
-        _ROCKSDB_PROVIDER,
-        _STATE_STORE_CONF,
-        rocksdb_state_store,
-    )
-
-    def current():
-        try:
-            return spark.conf.get(_STATE_STORE_CONF)
-        except Exception:
-            return None
-
-    prior = current()
-    try:
-        # case 1: conf explicitly set to a non-RocksDB provider -> restored
-        spark.conf.set(_STATE_STORE_CONF, "com.example.FakeProvider")
-        with rocksdb_state_store(spark):
-            assert current() == _ROCKSDB_PROVIDER
-        assert current() == "com.example.FakeProvider"
-
-        # case 2: conf unset -> set inside the block, unset again after
-        spark.conf.unset(_STATE_STORE_CONF)
-        before = current()  # None or Spark's built-in default
-        with rocksdb_state_store(spark):
-            assert current() == _ROCKSDB_PROVIDER
-        assert current() == before
-    finally:
-        if prior is None:
-            spark.conf.unset(_STATE_STORE_CONF)
-        else:
-            spark.conf.set(_STATE_STORE_CONF, prior)
 
 
 def test_drain_until_quiet_waits_for_inflight_input(spark, tmp_path):
